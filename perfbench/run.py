@@ -46,7 +46,9 @@ SPARK_JARS = os.path.join(SPARK_HOME, "jars")
 # -XX:-UsePerfData: no hsperfdata file outside the checkout
 JVM_OPTS = ["-Xmx4g", "-XX:-UsePerfData"]
 BUILD_LIMIT_S = 880
-RUN_LIMIT_S = 170
+# a run's time beyond --seconds: JVM start, inputs, the untimed warm-up
+# passes and the last timed pass (about 25-45 s on 4 cores)
+RUN_ALLOWANCE_S = 160
 ADD_OPENS = [
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
     "java.nio", "java.util", "java.util.concurrent", "java.util.concurrent.atomic",
@@ -128,6 +130,9 @@ def main():
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
+    # a SIGTERM ends the run like an error: the finally blocks below kill
+    # the JVM's process group and remove the run's scratch directory
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit("[perfbench] terminated"))
     if not os.path.isdir(os.path.join(LIB_SRC, "graft")):
         sys.exit(f"[perfbench] library sources not found under {LIB_SRC}")
     if not SPARK_HOME:
@@ -135,7 +140,7 @@ def main():
 
     start = time.time()
     built = build(start + BUILD_LIMIT_S)
-    deadline = start + (BUILD_LIMIT_S if built else RUN_LIMIT_S)
+    deadline = start + (BUILD_LIMIT_S if built else RUN_ALLOWANCE_S) + args.seconds
 
     work = os.path.join(BENCH, ".work", f"run-{os.getpid()}")
     os.makedirs(os.path.join(work, "tmp"))

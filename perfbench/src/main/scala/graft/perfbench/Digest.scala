@@ -57,12 +57,20 @@ object Digest {
   private def bytesHash(b: Array[Byte]): Long =
     XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
 
+  private def doubleHash(d: Double): Long =
+    mix(java.lang.Double.doubleToLongBits(if (d == 0d) 0d else d))
+
   def rowHash(r: InternalRow, schema: StructType): Long = {
     var h = 17L
     var i = 0
     while (i < schema.length) {
       val dt = schema(i).dataType
-      h = mix(h * 31 + (if (r.isNullAt(i)) NullHash else valueHash(r.get(i, dt), dt)))
+      h = mix(h * 31 + (if (r.isNullAt(i)) NullHash else dt match {
+        // unboxed reads for the common scalar columns
+        case LongType => mix(r.getLong(i))
+        case DoubleType => doubleHash(r.getDouble(i))
+        case _ => valueHash(r.get(i, dt), dt)
+      }))
       i += 1
     }
     h
@@ -77,9 +85,7 @@ object Digest {
     case FloatType =>
       val f = v.asInstanceOf[Float]
       mix(java.lang.Float.floatToIntBits(if (f == 0f) 0f else f).toLong)
-    case DoubleType =>
-      val d = v.asInstanceOf[Double]
-      mix(java.lang.Double.doubleToLongBits(if (d == 0d) 0d else d))
+    case DoubleType => doubleHash(v.asInstanceOf[Double])
     case _: StringType => XXH64.hashUTF8String(v.asInstanceOf[UTF8String], 42L)
     case BinaryType => bytesHash(v.asInstanceOf[Array[Byte]])
     case _: DecimalType => bytesHash(v.toString.getBytes("UTF-8"))

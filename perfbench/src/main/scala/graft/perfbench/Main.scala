@@ -55,6 +55,8 @@ object Main {
     "q77_stream_chunk_replay", "q85_stream_dedup_ttl_replay",
     "q94_stream_ingest_txlog_append")
   val Workloads: Seq[String] = Seq("spell_cast", "batch_queries", "stream_replay")
+  /** One-partition casts a traced spell_cast run makes after its passes. */
+  val SingleCasts = 5
 
   final case class Args(workload: String = "", seed: Long = 1, seconds: Double = 10,
       trace: Boolean = false, benchDir: String = "perfbench",
@@ -119,42 +121,34 @@ object Main {
     md.digest().map("%02x".format(_)).mkString.take(16)
   }
 
-  /** `Tables.sourceFingerprint` (name, size, mtime), read reflectively so
-    * the benchmark still builds if that helper moves.
-    */
-  def tablesFingerprint(dir: String): String = try {
-    val m = graft.Tables.getClass.getMethods.find(_.getName == "sourceFingerprint").get
-    m.invoke(graft.Tables, new File(dir)).toString
-  } catch { case _: Throwable => "unavailable" }
+  /** `Tables.sourceFingerprint` (name, size, mtime) of the fixture. */
+  def tablesFingerprint(dir: String): String = graft.Tables.sourceFingerprint(new File(dir))
 
-  /** The five process memos' cumulative build seconds, by name. A memo
-    * that no longer exists reads as absent.
-    */
-  def memoSeconds(): Map[String, Double] = Seq(
-    "graft.operators.Curation$" -> "keptKernelBuildSec",
-    "graft.operators.Curation$" -> "txlogChangesBuildSec",
-    "graft.operators.Dedup$" -> "d16IndexBuildSec",
-    "graft.operators.StreamReplay$" -> "orderedFixtureBuildSec",
-    "graft.operators.StreamReplay$" -> "gateSidesBuildSec").flatMap { case (cls, field) =>
-    try {
-      val c = Class.forName(cls)
-      val obj = c.getField("MODULE$").get(null)
-      val v = c.getMethod(field).invoke(obj).asInstanceOf[java.util.concurrent.atomic.AtomicLong]
-      Some(field -> v.get() / 1e9)
-    } catch { case _: Throwable => None }
-  }.toMap
+  /** The five process memos' cumulative build seconds, by name. */
+  def memoSeconds(): Map[String, Double] = {
+    import graft.operators.{Curation, Dedup, StreamReplay}
+    Map(
+      "keptKernelBuildSec" -> Curation.keptKernelBuildSec,
+      "txlogChangesBuildSec" -> Curation.txlogChangesBuildSec,
+      "d16IndexBuildSec" -> Dedup.d16IndexBuildSec,
+      "orderedFixtureBuildSec" -> StreamReplay.orderedFixtureBuildSec,
+      "gateSidesBuildSec" -> StreamReplay.gateSidesBuildSec).map { case (k, v) => k -> v.get() / 1e9 }
+  }
 
   def json(metrics: Seq[(String, String, Double)]): String =
     metrics.map { case (n, u, v) => s""""$n":{"value":$v,"unit":"$u"}""" }.mkString("{", ",", "}")
 }
 
+/** One pass. Its wall and CPU time add up its ops only: the
+  * housekeeping and bookkeeping between ops are left out.
+  */
 final case class PassResult(index: Int, traced: Boolean, startMs: Double,
     endMs: Double, ops: Seq[OpOutcome], rddsLeft: Int, counters: Option[LayerCounters],
     gcMs: Long, jitMs: Long, compiles: Long, cpuNs: Long) {
-  def wallS: Double = (endMs - startMs) / 1e3
+  def wallS: Double = ops.map(_.wallS).sum
 }
 
-/** One benchmark run: setup, an untimed first pass, then closed-loop
+/** One benchmark run: setup, untimed warm-up passes, then closed-loop
   * timed passes for `--seconds`.
   */
 final class Run(spark: SparkSession, a: Main.Args) {
@@ -162,7 +156,7 @@ final class Run(spark: SparkSession, a: Main.Args) {
 
   private val cores = spark.sparkContext.defaultParallelism
   private val workload: Workload = a.workload match {
-    case "spell_cast" => new SpellWorkload(spark, a.seed)
+    case "spell_cast" => new SpellWorkload(spark, a.sfDir, a.seed)
     case "batch_queries" => new QueryWorkload(spark, a.sfDir, BatchMembers, expectedDigests(a.benchDir))
     case "stream_replay" => new QueryWorkload(spark, a.sfDir, StreamMembers, expectedDigests(a.benchDir))
   }
@@ -172,31 +166,37 @@ final class Run(spark: SparkSession, a: Main.Args) {
   private var failed = 0
   private var timedMemoGrowth = 0
 
+  private def record(o: OpOutcome): Unit = {
+    attempted += 1
+    o.error.foreach { e => failed += 1; System.err.println(s"[perfbench] ${o.member} failed: $e") }
+  }
+
   private def order(pass: Int): Seq[String] =
-    new Random(a.seed * 1000003L + pass).shuffle(workload.members)
+    new Random(a.seed * 1000003L + pass).shuffle(Seq.fill(workload.repeats)(workload.members).flatten)
 
   private def runPass(index: Int, traced: Boolean): PassResult = {
     val counters = if (traced) tracer.map(_.attach(index)) else { tracer.foreach(_.detach()); None }
     val gc0 = JvmCounters.gcMs
     val jit0 = JvmCounters.jitMs
     val cg0 = org.apache.spark.perfbench.SparkBridge.codegenCompiles
-    val cpu0 = JvmCounters.processCpuNs
     val t0 = Clock.nowMs
     var rddsLeft = 0
-    val ops = order(index).map { m =>
+    var cpuNs = 0L
+    val ops = order(index).zipWithIndex.map { case (m, j) =>
       val memo0 = memoSeconds()
       val rdds0 = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      val id = s"$index/$m"
+      val id = s"$index/$j/$m"
       if (traced) tracer.foreach(_.startOp(id))
+      val cpu0 = JvmCounters.processCpuNs
       val o = workload.run(m)
+      cpuNs += JvmCounters.processCpuNs - cpu0
       if (traced) tracer.foreach { t =>
         t.drain()
         t.span("op", m, o.startMs, o.endMs, index, id)
         t.span("operators.build", m, o.startMs, o.builtMs, index, id)
         t.span("action", m, o.builtMs, o.endMs, index, id)
       }
-      attempted += 1
-      o.error.foreach { e => failed += 1; System.err.println(s"[perfbench] $m failed: $e") }
+      record(o)
       if (index > 0) {
         val grown = memoSeconds().count { case (k, v) => v > memo0.getOrElse(k, 0.0) }
         if (grown > 0) System.err.println(s"[perfbench] $m rebuilt $grown memo(s) in a timed pass")
@@ -210,8 +210,7 @@ final class Run(spark: SparkSession, a: Main.Args) {
     if (traced) tracer.foreach { t => t.drain(); t.span("pass", s"pass $index", t0, t1, index, index.toString) }
     PassResult(index, traced, t0, t1, ops, rddsLeft, counters,
       JvmCounters.gcMs - gc0, JvmCounters.jitMs - jit0,
-      org.apache.spark.perfbench.SparkBridge.codegenCompiles - cg0,
-      JvmCounters.processCpuNs - cpu0)
+      org.apache.spark.perfbench.SparkBridge.codegenCompiles - cg0, cpuNs)
   }
 
   def execute(): Unit = {
@@ -219,10 +218,11 @@ final class Run(spark: SparkSession, a: Main.Args) {
     val s0 = Clock.nowMs
     workload.setup()
     val s1 = Clock.nowMs
-    runPass(0, traced = false) // untimed: JIT, codegen, the process memos
+    // untimed: JIT, codegen, the process memos
+    (1 to workload.warmupPasses).foreach(_ => runPass(0, traced = false))
     val setupS = (Clock.nowMs - jvmStartMs) / 1e3
     System.err.println(f"[perfbench] setup: session ${(s0 - jvmStartMs) / 1e3}%.2f s, " +
-      f"inputs ${(s1 - s0) / 1e3}%.2f s, first pass ${(Clock.nowMs - s1) / 1e3}%.2f s")
+      f"inputs ${(s1 - s0) / 1e3}%.2f s, warm-up ${(Clock.nowMs - s1) / 1e3}%.2f s")
     val memoBuildS = memoSeconds().values.sum
 
     val w0 = Clock.nowMs
@@ -232,11 +232,18 @@ final class Run(spark: SparkSession, a: Main.Args) {
       // traced, so trace.overhead_ratio compares like with like
       done += runPass(done.length + 1, traced = a.trace && done.length % 2 == 0)
     tracer.foreach(_.detach())
+    // the one-partition casts, untraced and outside the passes
+    val singles = workload match {
+      case w: SpellWorkload if a.trace =>
+        w.singleOps(SingleCasts).map { case (o, loopS) => record(o); (o.wallS, loopS) }
+      case _ => Nil
+    }
 
     val opWalls = done.toSeq.flatMap(_.ops.map(_.wallS))
     val memberP50 = done.toSeq.flatMap(_.ops).groupBy(_.member).toSeq.sortBy(_._1).map { case (m, os) =>
       val p50 = Stats.median(os.map(_.wallS))
-      System.err.println(f"[perfbench] $m%-34s p50 $p50%.3f s over ${os.length}")
+      System.err.println(f"[perfbench] $m%-34s p50 $p50%.3f s over ${os.length}: " +
+        os.map(o => f"${o.wallS}%.3f").mkString(" "))
       p50
     }
     val tail = Stats.tail(opWalls)
@@ -260,7 +267,7 @@ final class Run(spark: SparkSession, a: Main.Args) {
         // neighbouring members from run to run
         "op_p50_s" -> Stats.median(memberP50),
         "cpu_s" -> Stats.median(done.map(_.cpuNs / 1e9).toSeq))
-      else perLayer(done.toSeq, memoBuildS, tail)
+      else perLayer(done.toSeq, memoBuildS, tail, singles)
     val units = (Metrics.endToEnd ++ Metrics.perLayer).toMap
     metrics.foreach { case (n, v) =>
       require(!v.isNaN && !v.isInfinite, s"metric $n is not finite: $v")
@@ -271,7 +278,7 @@ final class Run(spark: SparkSession, a: Main.Args) {
   }
 
   private def perLayer(done: Seq[PassResult], memoBuildS: Double,
-      tail: Stats.Tail): Seq[(String, Double)] = {
+      tail: Stats.Tail, singles: Seq[(Double, Double)]): Seq[(String, Double)] = {
     val traced = done.filter(_.traced)
     val untraced = done.filterNot(_.traced)
     val n = traced.length.toDouble
@@ -283,17 +290,17 @@ final class Run(spark: SparkSession, a: Main.Args) {
     val opsN = traced.map(_.ops.length).sum.toDouble
     val wallS = traced.map(_.wallS).sum
     val jobIvs = spans.filter(_.kind == "spark.job").map(s => (s.startMs, s.endMs))
-    val gapS = traced.map(p => p.wallS - Span.coveredMs(jobIvs, p.startMs, p.endMs) / 1e3).sum / n
+    val gapS = traced.flatMap(_.ops).map(o => o.wallS - Span.coveredMs(jobIvs, o.startMs, o.endMs) / 1e3).sum / n
     val trig = cs.flatMap(_.triggerMs)
     val shapes = traced.flatMap(_.ops).groupBy(_.member).map { case (m, os) => m -> Stats.median(os.map(_.wallS)) }
     val (spellMetrics, loopShare) = workload match {
       case w: SpellWorkload =>
-        val probe = w.engineProbe()
-        val single = shapes("single")
-        (probe ++ Map(
+        (w.engineProbe() ++ Map(
           "casts_per_s" -> w.casts / shapes("parallel"),
-          "ns_per_cast_single" -> single * 1e9 / w.casts),
-          probe("engine.loop_ns_per_cast") * w.casts / (single * 1e9))
+          "ns_per_cast_single" -> Stats.median(singles.map(_._1)) * 1e9 / w.casts,
+          "engine.loop_ns_per_cast" -> Stats.median(singles.map(_._2)) * 1e9 / w.casts),
+          // per pair: the loop and the job it is compared with ran back to back
+          Stats.median(singles.map { case (job, loop) => loop / job }))
       case _ => (Map.empty[String, Double], 0.0)
     }
     val cgMean = org.apache.spark.perfbench.SparkBridge.codegenMeanMs

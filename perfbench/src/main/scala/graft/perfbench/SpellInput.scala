@@ -1,58 +1,51 @@
 package graft.perfbench
 
-import java.util.SplittableRandom
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{col, lit, xxhash64}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
-/** One generated seed event for the spell_cast workload. `value` is
-  * 2^k·(1+u) with u in [0.25, 0.75), so HalvingSpell runs exactly k+1
-  * hops on it. The payload fields only add codec bytes per hop. Every
-  * field has a fixed encoded size (ids start at [[FirstId]], so they
-  * always take the int32 encoding), so the bytes per event do not
-  * depend on the seed.
+/** The spell_cast workload's seed events: the fixture's events table as
+  * `q04_spell_cast_loop` and `Bench`'s cast micro-bench cast it, an
+  * `(event_id, value)` pair that enters the engine as the three-field
+  * event (event_id, value, hop 0). HalvingSpell halves `value` once per
+  * hop while it is above 1, so the hop distribution and the codec bytes
+  * per hop are the fixture's own. The table is taken [[Replicas]] times,
+  * as `Bench` does (so the per-core shape casts for longer than its
+  * tasks take to launch), and the run seed shuffles the order: which
+  * events share a partition and the order they are cast in change with
+  * the seed, the amount of work does not.
   */
-final case class SeedEvent(eventId: Long, value: Double, user: Long,
-    kind: String, note: String, flag: Boolean)
-
 object SpellInput {
 
-  /** Seeds per run: a power of two, so the permutation below is a bijection. */
-  val DefaultSeeds: Int = 1 << 16
+  type Seed = (java.lang.Long, java.lang.Double)
 
-  /** Hop counts run 1..MaxHops, equally often. */
-  val MaxHops = 16
+  val Replicas = 2
 
-  val FirstId = 1000000L
-
-  private val Kinds = Vector("signup", "render", "upload", "logout",
-    "search", "refund", "invite", "export")
-
-  /** Seed event `i` of `n` for run seed `seed`. The hop count is drawn
-    * through an odd-multiplier permutation of 0..n-1, so the histogram
-    * of hop counts (and with it the total cast work) is the same for
-    * every seed; only which event gets which count changes.
-    */
-  def event(seed: Long, i: Long, n: Int): SeedEvent = {
-    val rnd = new SplittableRandom(seed * 0x9e3779b97f4a7c15L + i)
-    val mult = (seed * 0x2545f4914f6cdd1dL) | 1L
-    val slot = (i * mult + seed) & (n - 1)
-    val k = (slot % MaxHops).toInt
-    val u = 0.25 + rnd.nextDouble() * 0.5
-    val note = new String(Array.fill(16)(('a' + rnd.nextInt(26)).toChar))
-    SeedEvent(FirstId + i, math.scalb(1.0 + u, k), 100000L + rnd.nextInt(900000),
-      Kinds(rnd.nextInt(Kinds.length)), note, rnd.nextBoolean())
+  /** The fixture's `(event_id, value)` rows. */
+  def fixture(spark: SparkSession, sfDir: String): Dataset[Seed] = {
+    import spark.implicits._
+    graft.Tables.events(spark, sfDir).select(col("event_id"), col("value")).as[Seed]
   }
 
-  def events(seed: Long, n: Int): Iterator[SeedEvent] = {
-    require(Integer.bitCount(n) == 1, s"seed count $n must be a power of two")
-    Iterator.range(0, n).map(i => event(seed, i.toLong, n))
+  /** The run's seed events: [[Replicas]] copies of `base`, in an order
+    * drawn from `seed` (a hash of the seed, the row and its copy).
+    */
+  def events(base: Dataset[Seed], seed: Long): Dataset[Seed] = {
+    import base.sparkSession.implicits._
+    base.crossJoin(base.sparkSession.range(Replicas).toDF("copy"))
+      .orderBy(xxhash64(lit(seed), col("event_id"), col("value"), col("copy")),
+        col("event_id"), col("value"), col("copy"))
+      .select(col("event_id"), col("value")).as[Seed]
   }
 
   /** Hops HalvingSpell emits for a seed value, derived without the engine. */
-  def hopsOf(value: Double): Int = {
-    var v = value
+  def hopsOf(value: java.lang.Double): Int = {
     var h = 0
-    while (v > 1.0) { v /= 2; h += 1 }
+    if (value != null) {
+      var v: Double = value
+      while (v > 1.0) { v /= 2; h += 1 }
+    }
     h
   }
 
@@ -61,15 +54,18 @@ object SpellInput {
     StructField("value", DoubleType)))
 
   /** The (event_id, hop, value) rows a correct cast emits for one seed. */
-  def expectedRows(e: SeedEvent): Iterator[InternalRow] =
-    Iterator.range(1, hopsOf(e.value) + 1)
-      .map(h => InternalRow(e.eventId, h.toLong, math.scalb(e.value, -h)))
+  def expectedRows(e: Seed): Iterator[InternalRow] = {
+    val id = if (e._1 == null) -1L else e._1.longValue
+    Iterator.range(1, hopsOf(e._2) + 1)
+      .map(h => InternalRow(id, h.toLong, math.scalb(e._2.doubleValue, -h)))
+  }
 
-  /** Closed-form expectation for a whole run, and its cast count
-    * (one cast per seed plus one per emitted hop).
+  /** Closed-form expectation for a run over [[Replicas]] copies of
+    * `base`, and its cast count (one cast per seed plus one per emitted
+    * hop). The digest is a sum over rows, so copies multiply it.
     */
-  def expected(seed: Long, n: Int): (Digest.Result, Long) = {
-    val d = Digest.ofRows(events(seed, n).flatMap(expectedRows), OutputSchema)
-    (d, n + d.rows)
+  def expected(base: Seq[Seed]): (Digest.Result, Long) = {
+    val d = Digest.ofRows(base.iterator.flatMap(expectedRows), OutputSchema)
+    (Digest.Result(d.rows * Replicas, d.sum * Replicas), (base.length + d.rows) * Replicas)
   }
 }

@@ -27,10 +27,16 @@ final case class OpOutcome(member: String, startMs: Double, builtMs: Double,
 
 trait Workload {
   def members: Seq[String]
-  /** Timed passes per run, whatever `--seconds` says: enough that the
-    * median pass shrugs off passes slowed by a burst of host noise.
+  /** Timed passes per run, whatever `--seconds` says. */
+  def minPasses: Int = 2
+  /** Times each member runs in one pass. */
+  def repeats: Int = 1
+  /** Untimed passes before the timed ones, counted in setup_s. The first
+    * pass pays JIT, codegen and the process memos, but a query pass
+    * after it still reads about 1.3 times a warm one; after two it is
+    * within a few percent.
     */
-  def minPasses: Int = 3
+  def warmupPasses: Int = 2
   /** Builds and caches inputs; untimed, counted in setup_s. */
   def setup(): Unit
   def run(member: String): OpOutcome
@@ -88,47 +94,75 @@ final class QueryWorkload(spark: SparkSession, sfDir: String,
   def housekeeping(): Unit = Workload.dropCaches(spark)
 }
 
-/** spell_cast: generated seed events cast through HalvingSpell by
-  * `SpellEngine.castAllColumnar`, in one partition ("single") and one
-  * partition per core ("parallel").
+/** spell_cast: the fixture's events cast through HalvingSpell by
+  * `SpellEngine.castAllColumnar`. The timed passes cast them in one
+  * partition per core ("parallel"). The one-partition shape ("single")
+  * runs only in traced runs, after the passes, for the single-core
+  * figures: one thread is left to whatever its one core's host does, and
+  * its run-to-run spread was three times the per-core shape's.
   */
-final class SpellWorkload(spark: SparkSession, seed: Long,
-    seeds: Int = SpellInput.DefaultSeeds) extends Workload {
-  val members: Seq[String] = Seq("single", "parallel")
-  /** Memory-bound and about 2 s a pass, so more of them. */
-  override val minPasses = 8
-  private var inputs = Map.empty[String, Dataset[SeedEvent]]
+final class SpellWorkload(spark: SparkSession, sfDir: String, seed: Long) extends Workload {
+  val members: Seq[String] = Seq("parallel")
+  /** Two casts a pass, so the op median draws on more samples than passes. */
+  override val repeats = 2
+  override val minPasses = 6
+  /** A pass is about a second, and the first seconds of casting still
+    * compile the cast loop and grow the heap: the first timed casts of a
+    * run read up to twice the later ones after a single warm-up pass.
+    */
+  override val warmupPasses = 6
+  private var events: Dataset[SpellInput.Seed] = _
+  private var parallel: Dataset[SpellInput.Seed] = _
   private var expected: Digest.Result = _
+  private var sample: Vector[DynEvent] = Vector.empty
+  var seeds = 0
   var casts = 0L
 
   def setup(): Unit = {
-    import spark.implicits._
-    val n = seeds
-    val s = seed
-    val gen = spark.range(n).map(i => SpellInput.event(s, i, n))
-    val single = gen.coalesce(1).cache()
-    val parallel = gen.repartition(spark.sparkContext.defaultParallelism).cache()
-    single.count(); parallel.count()
-    inputs = Map("single" -> single, "parallel" -> parallel)
-    val (d, c) = SpellInput.expected(seed, n)
+    val base = SpellInput.fixture(spark, sfDir)
+    events = SpellInput.events(base, seed)
+    parallel = events.repartition(spark.sparkContext.defaultParallelism).cache()
+    parallel.count()
+    val fixtureRows = base.collect().toSeq
+    val (d, c) = SpellInput.expected(fixtureRows)
     expected = d
+    seeds = fixtureRows.length * SpellInput.Replicas
     casts = c
+    sample = parallel.take(4096).map(SpellCast.toEvent).toVector
   }
 
-  def run(member: String): OpOutcome =
-    Workload.timed(member)(SpellCast.cast(spark, inputs(member))) { d =>
+  def run(member: String): OpOutcome = cast(member, parallel)
+
+  private def cast(shape: String, in: Dataset[SpellInput.Seed]): OpOutcome =
+    Workload.timed(shape)(SpellCast.cast(spark, in)) { d =>
       if (d == expected) None else Some(s"digest ${d.show}, expected ${expected.show}")
     }
+
+  /** `n` casts of the same events in one partition, each checked like a
+    * timed op and followed by the engine loop alone (`SpellEngine.runSeed`
+    * on the driver) over the same events, timed in seconds. The pairs
+    * give engine.loop_share; the one-partition input is cached for them
+    * and dropped.
+    */
+  def singleOps(n: Int): Seq[(OpOutcome, Double)] = {
+    val single = events.coalesce(1).cache()
+    val seedEvents = single.collect().map(SpellCast.toEvent)
+    try Seq.fill(n) {
+      val o = cast("single", single)
+      val t = System.nanoTime()
+      seedEvents.foreach(e => sink += SpellEngine.runSeed(HalvingSpell, e).length)
+      (o, (System.nanoTime() - t) / 1e9)
+    } finally single.unpersist(blocking = true)
+  }
 
   /** The cast caches nothing; the cached inputs stay. */
   def housekeeping(): Unit = ()
 
-  /** Written by the codec probe so its results stay live. */
+  /** Written by the driver-side probes so their results stay live. */
   @volatile private var sink = 0L
 
   /** Driver-side engine figures, outside any timed op. */
   def engineProbe(): Map[String, Double] = {
-    val sample = SpellInput.events(seed, seeds).take(4096).map(SpellCast.toEvent).toVector
     def timeNs(minNs: Long)(body: => Long): (Long, Long) = {
       var ns = 0L
       var units = 0L
@@ -140,40 +174,35 @@ final class SpellWorkload(spark: SparkSession, seed: Long,
       (ns, units)
     }
     def codecPass: Long = { sample.foreach(e => sink += EventCodec.roundTrip(e).fields.size); sample.length }
-    def loopPass: Long = sample.map(e => SpellEngine.runSeed(HalvingSpell, e).length + 1L).sum
-    timeNs(300000000L)(codecPass + loopPass) // warm both paths
+    timeNs(300000000L)(codecPass) // warm
     val (codecNs, trips) = timeNs(300000000L)(codecPass)
-    val (loopNs, loopCasts) = timeNs(300000000L)(loopPass)
     val bytes = sample.map(e => EventCodec.encode(EMap(e.fields)).length.toDouble).sum / sample.length
     Map(
       "engine.codec_roundtrip_ns" -> codecNs.toDouble / trips,
       "engine.codec_bytes_per_event" -> bytes,
-      "engine.loop_ns_per_cast" -> loopNs.toDouble / loopCasts,
       "engine.hops_per_seed" -> (casts - seeds).toDouble / seeds)
   }
 }
 
-/** The cast job, with the field mapping `q04_spell_cast_loop` uses plus
-  * the payload fields.
+/** The cast job, with the event mapping `q04_spell_cast_loop` and
+  * `Bench` use.
   */
 object SpellCast {
-  private val KId = EStr("event_id")
-  private val KValue = EStr("value")
-  private val KHop = EStr("hop")
-
-  def toEvent(e: SeedEvent): DynEvent = DynEvent(Map[EValue, EValue](
-    KId -> EInt(e.eventId), KValue -> EFloat(e.value), KHop -> EInt(0),
-    EStr("user") -> EInt(e.user), EStr("kind") -> EStr(e.kind),
-    EStr("note") -> EStr(e.note), EStr("flag") -> EBool(e.flag)))
+  def toEvent(e: SpellInput.Seed): DynEvent = e match { case (id, v) =>
+    DynEvent(Map[EValue, EValue](
+      EStr("event_id") -> (if (id == null) ENil else EInt(id)),
+      EStr("value") -> (if (v == null) ENil else EFloat(v)),
+      EStr("hop") -> EInt(0)))
+  }
 
   def fromHop(e: DynEvent): (Long, Long, Double) =
-    (e.fields.get(KId) match { case Some(EInt(i)) => i; case _ => -1L },
-      e.fields.get(KHop) match { case Some(EInt(h)) => h; case _ => -1L },
-      e.fields.get(KValue) match { case Some(EFloat(v)) => v; case _ => Double.NaN })
+    (e.get("event_id") match { case Some(EInt(i)) => i; case _ => -1L },
+      e.get("hop") match { case Some(EInt(h)) => h; case _ => -1L },
+      e.get("value") match { case Some(EFloat(v)) => v; case _ => Double.NaN })
 
-  def cast(spark: SparkSession, in: Dataset[SeedEvent]): DataFrame = {
+  def cast(spark: SparkSession, in: Dataset[SpellInput.Seed]): DataFrame = {
     import spark.implicits._
-    SpellEngine.castAllColumnar[SeedEvent, (Long, Long, Double)](
+    SpellEngine.castAllColumnar[SpellInput.Seed, (Long, Long, Double)](
       in, HalvingSpell, toEvent, fromHop).toDF("event_id", "hop", "value")
   }
 }

@@ -10,24 +10,36 @@ import graft.operators.SpellQueries.HalvingSpell
 
 class PerfbenchSpec extends AnyFunSuite {
 
-  test("the spell input generator is deterministic for a seed") {
-    val a = SpellInput.events(7, 1024).toVector
-    assert(a == SpellInput.events(7, 1024).toVector)
-    assert(a != SpellInput.events(8, 1024).toVector)
+  /** Stand-in for the fixture's `(event_id, value)` rows: values from
+    * 0 (no hop) to a few hundred (nine hops), plus the edge cases.
+    */
+  private val base: IndexedSeq[SpellInput.Seed] = {
+    val rnd = new Random(17)
+    (0 until 997).map(i => (java.lang.Long.valueOf(1000L + i),
+      java.lang.Double.valueOf(rnd.nextDouble() * 560))) ++
+      Seq[SpellInput.Seed]((1L, 1.0), (2L, 1.0000001), (3L, 0.0), (4L, null), (null, 5.5))
   }
 
-  test("every seed gets the same hop histogram and codec size") {
-    def hist(seed: Long) =
-      SpellInput.events(seed, 1024).map(e => SpellInput.hopsOf(e.value)).toVector.groupBy(identity).view.mapValues(_.size).toMap
-    assert(hist(1) == hist(99))
-    assert(hist(1).keySet == (1 to SpellInput.MaxHops).toSet)
-    def bytes(seed: Long) = SpellInput.events(seed, 256)
-      .map(e => graft.engine.EventCodec.encode(graft.engine.EValue.EMap(SpellCast.toEvent(e).fields)).length).toSet
-    assert(bytes(1) == bytes(2) && bytes(1).size == 1)
+  test("the spell seed events are deterministic for a seed and keep the work") {
+    val spark = org.apache.spark.sql.SparkSession.builder().master("local[2]")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    try {
+      import spark.implicits._
+      val ds = spark.createDataset(base).toDF("event_id", "value").as[SpellInput.Seed]
+      def run(seed: Long) = SpellInput.events(ds, seed).collect().toVector
+      val a = run(7)
+      assert(a == run(7))
+      assert(a != run(8))
+      assert(a.groupBy(identity).view.mapValues(_.size).toMap ==
+        base.groupBy(identity).view.mapValues(_.size * SpellInput.Replicas).toMap)
+      val (d, casts) = SpellInput.expected(base)
+      assert(d == Digest.ofRows(a.iterator.flatMap(SpellInput.expectedRows), SpellInput.OutputSchema))
+      assert(casts == a.length + d.rows)
+    } finally spark.stop()
   }
 
   test("the closed-form cast expectation equals SpellEngine.runSeed") {
-    SpellInput.events(3, 4096).take(500).foreach { e =>
+    base.foreach { e =>
       val got = SpellEngine.runSeed(HalvingSpell, SpellCast.toEvent(e)).map(SpellCast.fromHop)
       val want = SpellInput.expectedRows(e).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toVector
       assert(got == want, s"seed event $e")
@@ -35,7 +47,7 @@ class PerfbenchSpec extends AnyFunSuite {
   }
 
   test("digests ignore row order and see every field") {
-    val rows = SpellInput.events(5, 256).flatMap(SpellInput.expectedRows).map(_.copy()).toVector
+    val rows = base.flatMap(SpellInput.expectedRows).map(_.copy()).toVector
     val d = Digest.ofRows(rows.iterator, SpellInput.OutputSchema)
     assert(d == Digest.ofRows(new Random(1).shuffle(rows).iterator, SpellInput.OutputSchema))
     val changed = rows.updated(10, org.apache.spark.sql.catalyst.InternalRow(
