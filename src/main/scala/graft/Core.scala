@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** A named query in the graft inventory.
   *
@@ -29,7 +30,58 @@ object Q {
   */
 object Tables {
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(paths*)` without its schema-inference job.
+    * Spark infers a parquet schema by reading one footer inside a
+    * one-task Spark job on every call; this reads the same footer on
+    * the driver, through the same `readSchemaFromFooter` and converter,
+    * and hands the result to the reader. Every schema-less parquet
+    * read goes through here.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(footerSchema(spark, paths)).parquet(paths: _*)
+
+  /** The schema Spark would infer for `paths` (schema merging off, the
+    * default), from the one file its inference touches: the first data
+    * file by path among the leaf files its file index lists (names
+    * starting `_` or `.` skipped, except `k=v` partition directories).
+    * Spark would read a `_metadata` summary first, but it writes none
+    * by default and nothing here writes one. Partition columns are left
+    * to the reader's own partition discovery, as with inference. With
+    * no file to read (or a missing path), Spark's inference runs and
+    * fails as it would.
+    */
+  private[graft] def footerSchema(spark: SparkSession, paths: Seq[String]): StructType = {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    def listed(name: String) =
+      !(name.startsWith("_") && !name.contains("=") || name.startsWith(".") ||
+        name.endsWith("._COPYING_"))
+    def leaves(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).toSeq.filter(c => listed(c.getPath.getName))
+          .flatMap(leaves(fs, _))
+      else Seq(st)
+    val files = paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(hadoopConf)
+      if (fs.exists(path)) leaves(fs, fs.getFileStatus(path)) else Nil
+    }
+    files.sortBy(_.getPath.toString).headOption match {
+      case Some(f) =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      case None => spark.read.parquet(paths: _*).schema
+    }
+  }
 
   /** `events.ts` has shipped in two physical layouts across fixture
     * generations — parquet TIMESTAMP(NANOS) (which Spark only reads as
@@ -73,7 +125,7 @@ object Tables {
   private[graft] def eventsRawFrame(spark: SparkSession, dir: String): DataFrame = {
     // harmless when ts is already micros; required to decode nanos
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet")
+    parquet(spark, s"$dir/events.parquet")
   }
 
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame =
@@ -125,7 +177,7 @@ object Tables {
         paths.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_: Path))
       }
     }
-    s.read.parquet(dest.toString)
+    parquet(s, dest.toString)
   }
 
   /** Stable digest of a parquet file-or-directory's (name, size,
@@ -170,17 +222,20 @@ object Tables {
     // probe below is only safe on exchange-free plans — on a frame
     // containing a shuffle boundary it would force AQE's final-plan
     // resolution and PRE-EXECUTE the upstream stages (that work then
-    // runs twice). The safe-usage rule used to live in a Scaladoc
-    // comment; now the analyzed plan is inspected and any
-    // shuffle-inducing operator makes spread a no-op (return the
-    // frame unchanged — the conservative direction: never an extra
-    // exchange, never double execution). All current call sites are
+    // runs twice). The analyzed plan is inspected against a WHITELIST
+    // of row-local nodes (leaf scans, projections, filters, aliases and
+    // the object serialize/deserialize/map nodes); any other node —
+    // join, aggregate, set operation, sort, grouped map, or one added
+    // by a later Spark — counts as shuffle-bound and makes spread a
+    // no-op (the conservative direction: never an extra exchange,
+    // never double execution). All current call sites are
     // scan-adjacent projections/filters, so this changes no plan.
     import org.apache.spark.sql.catalyst.plans.logical._
     val shuffleBound = df.queryExecution.analyzed.exists {
-      case _: Join | _: Aggregate | _: Distinct | _: Deduplicate |
-           _: Sort | _: Window | _: GlobalLimit | _: RepartitionOperation => true
-      case _ => false
+      case _: LeafNode | _: Project | _: Filter | _: SubqueryAlias |
+           _: SerializeFromObject | _: DeserializeToObject | _: TypedFilter |
+           _: MapElements | _: MapPartitions | _: AppendColumns => false
+      case _ => true
     }
     if (shuffleBound) df
     else {

@@ -86,7 +86,7 @@ object ScaleGen {
 
     if (!tables("documents") && !tables("embeddings")) { spark.stop(); return }
 
-    val docs = spark.read.parquet(s"$srcDir/documents.parquet")
+    val docs = Tables.parquet(spark, s"$srcDir/documents.parquet")
     val nDocs = docs.count()
     docs.crossJoin(reps)
       .select(
@@ -101,7 +101,7 @@ object ScaleGen {
       .repartition(cpus.toInt)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
 
-    val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")
+    val emb = Tables.parquet(spark, s"$srcDir/embeddings.parquet")
     val nVecs = emb.count()
     val dim = graft.functions.TextVec.EmbDim
     val shifted = (0 until factor).map { k =>

@@ -11,9 +11,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `GraftExtensions.register(spark)` on a live session.
   *
   * This is the (a)/(b) tier of the custom-operator ladder — scalar
-  * codegen expressions. No custom LogicalPlan/Strategy exists on
-  * purpose: every whole-operator semantic in the inventory composes
-  * from Catalyst-planned built-ins (SURVEY.md §4 "start with none").
+  * codegen expressions, plus optimizer rules and one physical
+  * preparation rule over Spark's own operators. No custom
+  * LogicalPlan/Strategy exists on purpose: every whole-operator
+  * semantic in the inventory composes from Catalyst-planned built-ins
+  * (SURVEY.md §4 "start with none").
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -21,6 +23,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
     GraftExtensions.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.queryStagePrepRules.foreach(r => ext.injectQueryStagePrepRule(_ => r))
   }
 }
 
@@ -145,19 +148,32 @@ object GraftExtensions {
     Seq(graft.plans.InferJaccardSizeFilter, graft.plans.LevenshteinLengthPruning,
       graft.plans.RewriteJaccardThresholdPredicate)
 
+  /** The physical rules GraftExtensions installs into adaptive query
+    * planning, after `EnsureRequirements` — again one list for both
+    * installation paths.
+    */
+  val queryStagePrepRules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
+    org.apache.spark.sql.execution.SparkPlan]] =
+    Seq(graft.plans.OnePartitionSortExchange)
+
   /** Register on an existing session (e.g. one the driver built):
     * functions into the registry, optimizer rules into
     * `spark.experimental.extraOptimizations` (the live-session analog
     * of `injectOptimizerRule` — both run after the stable optimizer
-    * batches). Idempotent: rules already present are not re-appended.
+    * batches), query-stage preparation rules through
+    * [[org.apache.spark.sql.graft.PlannerBridge]] (a live session has
+    * no public door for physical rules). Idempotent: the optimizer
+    * rules end the list once each, in the order above, wherever they
+    * stood before — InferJaccardSizeFilter must precede the rewrite
+    * that consumes its pattern.
     */
   def register(spark: SparkSession): Unit = {
     definitions.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         name, builder, "built-in")
     }
-    val existing = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =
-      existing ++ optimizerRules.filterNot(existing.contains)
+      spark.experimental.extraOptimizations.filterNot(optimizerRules.contains) ++ optimizerRules
+    org.apache.spark.sql.graft.PlannerBridge.addQueryStagePrepRules(spark, queryStagePrepRules)
   }
 }

@@ -417,7 +417,7 @@ object AnnKmeans {
     import s.implicits._
     // the model read-back is model-sized (k×dim), the same category
     // as the literal path's driver-side model
-    val cents = s.read.parquet(centPath)
+    val cents = Tables.parquet(s, centPath)
       .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
     val q = assignLiteral(
         Tables.embeddings(s, d).filter(col("vec_id") < queryMax), cents)
@@ -436,8 +436,9 @@ object AnnKmeans {
         probed.contains(n.stripPrefix("cell=").toLong))
       .map(n => s"$idxPath/$n").toSeq.sorted
     val idx =
-      if (existing.isEmpty) s.read.parquet(idxPath).filter(lit(false))
-      else s.read.option("basePath", idxPath).parquet(existing: _*)
+      if (existing.isEmpty) Tables.parquet(s, idxPath).filter(lit(false))
+      else s.read.option("basePath", idxPath).schema(Tables.footerSchema(s, existing))
+        .parquet(existing: _*)
     val result = idx.join(broadcast(q),
         col("cell") === col("q_cell") && col("vec_id") =!= col("q_id"))
       .select(col("q_id").as("query_id"), col("vec_id").as("neighbor_id"),
@@ -565,7 +566,7 @@ object AnnKmeans {
       .withColumn("nrm", norm(col("embedding")))
       .repartition(col("cell"))
       .write.partitionBy("cell").mode("overwrite").parquet(idxPath)
-    val centsDf = s.read.parquet(centPath) // the persisted model frame
+    val centsDf = Tables.parquet(s, centPath) // the persisted model frame
     def cellMeans(df: DataFrame): DataFrame = df
       .join(broadcast(centsDf), col("cell") === col("cid"))
       .select(col("cell"),
@@ -573,7 +574,7 @@ object AnnKmeans {
           * Scale.toDouble).cast("long").as("sd"))
       .groupBy(col("cell"))
       .agg(sum(col("sd")).as("ssum"), count(lit(1)).as("n"))
-    val buildMeans = cellMeans(s.read.parquet(idxPath))
+    val buildMeans = cellMeans(Tables.parquet(s, idxPath))
       .withColumnsRenamed(Map("ssum" -> "ssum_b", "n" -> "n_build"))
       .localCheckpoint() // pre-ingest snapshot: must not re-read post-append
     timings.foreach(_.put("build_sec", (System.nanoTime() - tBuild) / 1e9))
@@ -607,7 +608,7 @@ object AnnKmeans {
       .coalesce(1).write.mode("overwrite").parquet(deltaPath)
     val tIngest = System.nanoTime()
     val modelRead = centsDf.as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
-    val delta = assignLiteral(s.read.parquet(deltaPath), modelRead)
+    val delta = assignLiteral(Tables.parquet(s, deltaPath), modelRead)
       .withColumn("nrm", norm(col("embedding")))
     val deltaCells = delta.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).map(c => s"cell=$c").toSet // ≤ k ids

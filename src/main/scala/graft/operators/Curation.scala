@@ -2039,7 +2039,7 @@ object Curation {
     Tables.documents(s, d).repartition(64)
       .write.mode("overwrite").parquet(frag)
     compactPrefix(s, frag, comp)
-    s.read.parquet(comp)
+    Tables.parquet(s, comp)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_rows"),
         expr("bit_xor(CAST(conv(substr(md5(CAST(doc_id AS STRING) || ':' || text), 1, 15), 16, 10) AS BIGINT))")
@@ -2070,7 +2070,7 @@ object Curation {
     // metadata-only sizing: the listing already carries the lengths
     val nOut = math.max(1L,
       (before.map(_.getLen).sum + targetBytes - 1) / targetBytes).toInt
-    s.read.parquet(frag).repartition(nOut)
+    Tables.parquet(s, frag).repartition(nOut)
       .write.mode("overwrite").parquet(comp)
     val after = partFiles(new org.apache.hadoop.fs.Path(comp)).length
     if (nOut < before.length)
@@ -2114,7 +2114,7 @@ object Curation {
     val rows = prefixes.map { p =>
       val (nb, _, na) = compactPrefix(s, s"$frag/$p", s"$comp/$p")
       val src = p.stripPrefix("source=")
-      val got = s.read.parquet(s"$comp/$p")
+      val got = Tables.parquet(s, s"$comp/$p")
         .agg(count(lit(1)).as("n_rows"), digestCol.as("content_xor"))
         .head()
       val ok = origDigests(src) == ((got.getLong(0), got.getLong(1)))
@@ -2177,7 +2177,7 @@ object Curation {
           require(live.remove(p), s"commit $v removes unknown file $p")
         case (_, a, p) => sys.error(s"commit $v: unknown action $a on $p")
       }
-      s.read.parquet(live.toSeq.map(p => s"$files/$p"): _*)
+      Tables.parquet(s, live.toSeq.map(p => s"$files/$p"): _*)
         .agg(count(lit(1)).as("n_docs"), txlogDigest.as("content_xor"),
           sum(col("doc_id")).as("sum_doc_id"))
         .select(lit(v.toLong).as("version"), col("n_docs"),
@@ -2241,7 +2241,7 @@ object Curation {
         case (_, a, p) => sys.error(s"commit $v: unknown action $a on $p")
       }
     }
-    val liveDf = s.read.parquet(live.toSeq.map(p => s"$files/$p"): _*)
+    val liveDf = Tables.parquet(s, live.toSeq.map(p => s"$files/$p"): _*)
       .select(col("doc_id"), col("text"))
     // COW rewrite of the affected buckets ONLY:
     //  bucket 1 <- its live rows + the inserts ((id + 16M) % 16 == 1)
@@ -2270,7 +2270,7 @@ object Curation {
     Seq("merge_b1", "merge_b5").foreach(p =>
       require(live.add(p), s"merge re-adds live $p"))
     // the post-merge snapshot, read back from the committed files
-    s.read.parquet(live.toSeq.map(p => s"$files/$p"): _*)
+    Tables.parquet(s, live.toSeq.map(p => s"$files/$p"): _*)
       .select(col("doc_id"), col("text"))
       .groupBy((col("doc_id") % 16).as("bucket"))
       .agg(count(lit(1)).as("n_docs"), txlogDigest.as("content_xor"),
@@ -2342,7 +2342,7 @@ object Curation {
       }
     }
     val snapshot = live.toSet
-    val liveDf = s.read.parquet(live.toSeq.map(p => s"$files/$p"): _*)
+    val liveDf = Tables.parquet(s, live.toSeq.map(p => s"$files/$p"): _*)
       .select(col("doc_id"), col("text"))
     // writer A prepares: update bucket 2 ('a:' prefix) — COW rewrite
     liveDf.filter(col("doc_id") % 16 === 2)
@@ -2369,7 +2369,7 @@ object Curation {
     require(committedAt == nCommits + 1, s"B landed at $committedAt")
     // final state, replayed from the log alone
     txA.apply(live); txB.apply(live)
-    s.read.parquet(live.toSeq.map(p => s"$files/$p"): _*)
+    Tables.parquet(s, live.toSeq.map(p => s"$files/$p"): _*)
       .select(col("doc_id"), col("text"))
       .groupBy((col("doc_id") % 16).as("bucket"))
       .agg(count(lit(1)).as("n_docs"), txlogDigest.as("content_xor"),
@@ -2459,7 +2459,7 @@ object Curation {
       .write.mode("overwrite").partitionBy("seg").parquet(files)
     // per-file stats in ONE metadata-sized agg (≤24 rows) — a real
     // writer gets these free from the parquet footers it just wrote
-    val segStats = s.read.parquet(files)
+    val segStats = Tables.parquet(s, files)
       // hive partition-column discovery types `seg` int32 — normalize
       .groupBy(col("seg").cast("long").as("seg"))
       .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"),
@@ -2509,7 +2509,7 @@ object Curation {
     // the rewrite: seg 3's exact content in a new physical file (the
     // OPTIMIZE pattern) — stats identical to the file it replaces
     if (segStats.contains(3L)) {
-      s.read.parquet(s"$files/seg=3").write.mode("overwrite")
+      Tables.parquet(s, s"$files/seg=3").write.mode("overwrite")
         .parquet(s"$files/seg3_rw")
       commit(addJson("seg3_rw", segStats(3L)),
         l => require(l.put("seg3_rw", segStats(3L)).isEmpty, "rewrite re-adds")): Unit
@@ -2904,7 +2904,7 @@ object Curation {
     type St = (Long, Long, Long, Long, Long) // idLo, idHi, lenLo, lenHi, n
     // per-file stats in one metadata-sized agg (a real writer reads
     // these from the footers it just wrote)
-    val chunkStats: Seq[(String, St)] = s.read.parquet(s"$files/ingest")
+    val chunkStats: Seq[(String, St)] = Tables.parquet(s, s"$files/ingest")
       .groupBy(col("chunk").cast("long").as("chunk"))
       .agg(min(col("doc_id")).as("a"), max(col("doc_id")).as("b"),
         min(col("len")).as("c"), max(col("len")).as("e"),
@@ -2940,7 +2940,7 @@ object Curation {
       .sortWithinPartitions(col("zkey"))
       .drop("zkey")
       .write.mode("overwrite").parquet(s"$files/zopt")
-    val zStats: Seq[(String, St)] = s.read.parquet(s"$files/zopt")
+    val zStats: Seq[(String, St)] = Tables.parquet(s, s"$files/zopt")
       .groupBy(input_file_name().as("f"))
       .agg(min(col("doc_id")).as("a"), max(col("doc_id")).as("b"),
         min(col("len")).as("c"), max(col("len")).as("e"),
@@ -3311,7 +3311,7 @@ object Curation {
         s.range(1).select(lit(v.toLong).as("version"),
           lit(0L).as(s"n_$side"), lit(null).cast("long").as(s"${side}_xor"))
       else
-        s.read.parquet(paths.map(p => s"$files/$p"): _*)
+        Tables.parquet(s, paths.map(p => s"$files/$p"): _*)
           .agg(count(lit(1)).as(s"n_$side"), txlogDigest.as(s"${side}_xor"))
           .select(lit(v.toLong).as("version"), col(s"n_$side"),
             col(s"${side}_xor"))
@@ -3390,7 +3390,7 @@ object Curation {
     // standing deletes applied; the new file's sequence number (6)
     // puts it out of dv4/dv5's reach
     val b2Present = new java.io.File(s"$files/bucket=2").exists()
-    val bucket2 = (if (b2Present) s.read.parquet(s"$files/bucket=2")
+    val bucket2 = (if (b2Present) Tables.parquet(s, s"$files/bucket=2")
       // a tiny-fixture bucket with no docs wrote no directory — the
       // compaction of an empty bucket is an empty (schema-full) file
       else s.range(0).select(col("id").as("doc_id"), lit("").as("text")))
@@ -3473,7 +3473,7 @@ object Curation {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("text"), (col("doc_id") % 16).as("bucket"))
     docs.write.mode("overwrite").partitionBy("bucket").parquet(files)
-    val nTable = s.read.parquet(files).count()
+    val nTable = Tables.parquet(s, files).count()
     val buildSec = (System.nanoTime() - t0) / 1e9
     // the delete feed: a FIXED key list (materialized before the
     // timed commit — request generation is the caller's feed, not
@@ -3498,8 +3498,8 @@ object Curation {
         java.nio.charset.StandardCharsets.UTF_8))
     val commitSec = (System.nanoTime() - t1) / 1e9
     val t2 = System.nanoTime()
-    val dv = s.read.parquet(dvPath)
-    val nLive = s.read.parquet(files)
+    val dv = Tables.parquet(s, dvPath)
+    val nLive = Tables.parquet(s, files)
       .join(broadcast(dv), col("doc_id") === col("del_id"), "left_anti")
       .count()
     val scanSec = (System.nanoTime() - t2) / 1e9

@@ -1433,8 +1433,9 @@ object Dedup {
       .map(p => s"$indexPath/hp=$p")
     val idx =
       if (existing.isEmpty)
-        s.read.parquet(indexPath).filter(lit(false))
-      else s.read.option("basePath", indexPath).parquet(existing: _*)
+        Tables.parquet(s, indexPath).filter(lit(false))
+      else s.read.option("basePath", indexPath).schema(Tables.footerSchema(s, existing))
+        .parquet(existing: _*)
     val scan = idx.alias("c")
       .join(dbands.alias("n"),
         col("c.band") === col("n.band") && col("c.h") === col("n.h"))

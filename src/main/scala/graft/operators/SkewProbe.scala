@@ -68,7 +68,7 @@ object SkewProbe {
       .repartition(8)
       .write.mode("overwrite").parquet(factPath)
     val dimPath = s"$outRoot/dim_users"
-    s.read.parquet(factPath).select(col("skew_user").as("user_key")).distinct()
+    graft.Tables.parquet(s, factPath).select(col("skew_user").as("user_key")).distinct()
       .withColumn("segment", pmod(col("user_key"), lit(7)))
       .write.mode("overwrite").parquet(dimPath)
 
@@ -95,8 +95,8 @@ object SkewProbe {
         "spark.sql.files.openCostInBytes" -> "1k",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
-        val fact = s.read.parquet(factPath)
-        val dim = s.read.parquet(dimPath)
+        val fact = graft.Tables.parquet(s, factPath)
+        val dim = graft.Tables.parquet(s, dimPath)
         // the aggregate reads fact payload columns so the probe side
         // shuffles real rows (not a pruned-to-the-key projection),
         // and the post-join md5 makes the REDUCE stage the wall —

@@ -1110,7 +1110,7 @@ object StreamReplay {
         out
       })
     recordSourceBytes(s, new java.io.File(orderedDir))
-    val schema = s.read.parquet(orderedDir).schema
+    val schema = graft.Tables.footerSchema(s, Seq(orderedDir))
     s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(orderedDir)
@@ -1752,7 +1752,7 @@ object StreamReplay {
       out
     })
     recordSourceBytes(s, new java.io.File(orderedDir))
-    val schema = s.read.parquet(orderedDir).schema
+    val schema = graft.Tables.footerSchema(s, Seq(orderedDir))
     s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(orderedDir)
@@ -2302,7 +2302,7 @@ object StreamReplay {
       deltaMaxDocId: Option[Long]): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     import graft.functions.TextVec.tokenSet
-    val idx = s.read.parquet(idxPath)
+    val idx = graft.Tables.parquet(s, idxPath)
       .select(col("rep_id"), col("ts"), col("band"), col("h"))
     // ONE ordered copy, ONE streaming query: both gate halves fan out
     // from the same band-emission node and union into one sink, so

@@ -98,7 +98,7 @@ object ZorderLayout {
     * it un-wrapped and the scan node is directly visible.
     */
   private def scanAndMatch(s: SparkSession, path: String, pred: Column): (Long, Long) = {
-    val df = s.read.parquet(path).filter(pred)
+    val df = graft.Tables.parquet(s, path).filter(pred)
     val matched = df.collect().length.toLong
     val scanned = df.queryExecution.executedPlan.collectLeaves().collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>

@@ -44,13 +44,24 @@ object RewriteJaccardThresholdPredicate extends Rule[LogicalPlan] {
   }
 
   private def rewrite(cond: Expression): Expression = cond.transform {
-    case GreaterThanOrEqual(SortedArrayJaccard(a, b), Literal(c: Double, DoubleType)) =>
+    case GreaterThanOrEqual(SortedArrayJaccard(a, b), Finite(c)) =>
       SortedArrayJaccardAtLeast(a, b, c, strict = false)
-    case GreaterThan(SortedArrayJaccard(a, b), Literal(c: Double, DoubleType)) =>
+    case GreaterThan(SortedArrayJaccard(a, b), Finite(c)) =>
       SortedArrayJaccardAtLeast(a, b, c, strict = true)
-    case LessThan(Literal(c: Double, DoubleType), SortedArrayJaccard(a, b)) =>
+    case LessThan(Finite(c), SortedArrayJaccard(a, b)) =>
       SortedArrayJaccardAtLeast(a, b, c, strict = true)
-    case LessThanOrEqual(Literal(c: Double, DoubleType), SortedArrayJaccard(a, b)) =>
+    case LessThanOrEqual(Finite(c), SortedArrayJaccard(a, b)) =>
       SortedArrayJaccardAtLeast(a, b, c, strict = false)
+  }
+
+  /** A finite Double literal threshold. The kernel's codegen writes the
+    * threshold into Java source, where NaN or Infinity does not
+    * compile, so those comparisons keep their original expression.
+    */
+  private object Finite {
+    def unapply(e: Expression): Option[Double] = e match {
+      case Literal(c: Double, DoubleType) if !c.isNaN && !c.isInfinite => Some(c)
+      case _ => None
+    }
   }
 }

@@ -80,8 +80,8 @@ object DppProbe {
     def run(dppOn: Boolean): (String, Long, Long, Long, Int) =
       withConf(s, "spark.sql.optimizer.dynamicPartitionPruning.enabled", dppOn.toString) {
         withConf(s, "spark.sql.adaptive.enabled", "false") {
-          val fact = s.read.parquet(factPath)
-          val dim = s.read.parquet(dimPath)
+          val fact = graft.Tables.parquet(s, factPath)
+          val dim = graft.Tables.parquet(s, dimPath)
           val joined = fact.join(broadcast(dim), Seq("day"))
             .where(col("label") === "keep")
             .groupBy(col("day"))

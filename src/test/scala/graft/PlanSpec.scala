@@ -11,23 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // Verify-shaped planner: every driver-run session installs
-    // GraftExtensions (functions + threshold-inference optimizer
-    // rules), so the pins here must hold under the same rules —
-    // register() is the live-session path (the spec JVM's session may
-    // already exist, so .withExtensions wouldn't apply)
-    graft.functions.GraftExtensions.register(s)
-    s
-  }
+  // Verify-shaped planner: every Bench/Verify session installs
+  // GraftExtensions (functions, threshold-inference optimizer rules,
+  // the one-partition sort rule), so the pins here must hold under the
+  // same rules — TestSession registers them on the shared session
+  lazy val spark: SparkSession = TestSession.spark
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = TestSession.fixture("0.001")
 
   private def plan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, dir)
@@ -451,6 +441,21 @@ class PlanSpec extends AnyFunSuite {
         === org.apache.spark.sql.functions.col("o_orderkey"))
     assert(Tables.spread(joined) eq joined,
       "spread must return a join frame unchanged")
+  }
+
+  test("Tables.spread is a NO-OP (and job-free) on a frame under Intersect/Except") {
+    // the guard is a whitelist of row-local nodes, so set operations
+    // count as shuffle-bound too: the `.rdd` probe on such a frame
+    // would run its shuffle stages
+    import org.apache.spark.sql.functions.col
+    val l = Tables.lineitem(spark, dir).select(col("l_orderkey"))
+    val o = Tables.orders(spark, dir).select(col("o_orderkey"))
+    for (df <- Seq(l.intersect(o), l.except(o))) {
+      val (out, jobs) =
+        org.apache.spark.graft.JobCapture.jobsDuring(spark.sparkContext)(Tables.spread(df))
+      assert(out eq df, s"spread must return a set-operation frame unchanged:\n${df.queryExecution.analyzed}")
+      assert(jobs.isEmpty, s"spread launched ${jobs.size} job(s) on a set-operation frame")
+    }
   }
 
   test("d13: fuzzy-dedup candidates come from the banded equi-join — never a cartesian") {

@@ -264,5 +264,12 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(installed.count(_ == r) == 1,
         s"expected exactly one copy of ${r.ruleName}, got ${installed.count(_ == r)}")
     }
+    // the physical rules reach the live session's adaptive planner too,
+    // the same list `.withExtensions` injects at session build
+    val physical = spark.sessionState.adaptiveRulesHolder.queryStagePrepRules
+    GraftExtensions.queryStagePrepRules.foreach { r =>
+      assert(physical.count(_ == r) == 1,
+        s"expected exactly one copy of ${r.ruleName}, got ${physical.count(_ == r)}")
+    }
   }
 }

@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class JaccardEarlyExitSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSession.spark
 
   /** Deterministic sorted-distinct string arrays of varied sizes and
     * overlap fractions, plus the degenerate shapes (empty-empty,
@@ -63,42 +59,67 @@ class JaccardEarlyExitSpec extends AnyFunSuite {
   }
 
   test("rewrite rule swaps predicate sites and leaves value-emitting sites alone") {
-    spark.experimental.extraOptimizations =
-      (spark.experimental.extraOptimizations.filterNot(r =>
-        r == InferJaccardSizeFilter || r == RewriteJaccardThresholdPredicate)
-        :+ InferJaccardSizeFilter) :+ RewriteJaccardThresholdPredicate
-    try {
-      val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select(col("doc_id"), array_sort(array_distinct(split(col("text"), " "))).as("ts"))
-      // predicate site: value dropped after the >= — must rewrite, and
-      // the size-ratio inference must still be present (rule order)
-      val pred = docs.alias("a").join(docs.alias("b"), col("a.doc_id") < col("b.doc_id"))
-        .filter(SortedArrayJaccard(col("a.ts"), col("b.ts")) >= 0.9)
-        .select(col("a.doc_id"), col("b.doc_id"))
-      val p = pred.queryExecution.optimizedPlan.toString
-      assert(p.contains("sorted_array_jaccard_at_least"),
-        s"predicate site not rewritten:\n$p")
-      assert(p.contains("size("), s"size inference lost by the rewrite:\n$p")
-      // value site: jaccard emitted as a column — must NOT rewrite
-      val emit = docs.alias("a").join(docs.alias("b"), col("a.doc_id") < col("b.doc_id"))
-        .select(SortedArrayJaccard(col("a.ts"), col("b.ts")).as("jaccard"))
-      val pe = emit.queryExecution.optimizedPlan.toString
-      assert(!pe.contains("sorted_array_jaccard_at_least"),
-        s"value-emitting site wrongly rewritten:\n$pe")
-      // end-to-end: rewritten query ≡ plain query
-      val n = pred.count()
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(r =>
-          r == InferJaccardSizeFilter || r == RewriteJaccardThresholdPredicate)
-      val nPlain = docs.alias("a").join(docs.alias("b"), col("a.doc_id") < col("b.doc_id"))
-        .filter(SortedArrayJaccard(col("a.ts"), col("b.ts")) >= 0.9)
-        .select(col("a.doc_id"), col("b.doc_id"))
-        .count()
-      assert(n == nPlain, s"rewrite changed results: $n vs $nPlain")
+    // the shared session registers InferJaccardSizeFilter before
+    // RewriteJaccardThresholdPredicate, as every Bench/Verify session does
+    val docs = spark.read.parquet(s"${graft.TestSession.fixture("0.001")}/documents.parquet")
+      .select(col("doc_id"), array_sort(array_distinct(split(col("text"), " "))).as("ts"))
+    // predicate site: value dropped after the >= — must rewrite, and
+    // the size-ratio inference must still be present (rule order)
+    def pred = docs.alias("a").join(docs.alias("b"), col("a.doc_id") < col("b.doc_id"))
+      .filter(SortedArrayJaccard(col("a.ts"), col("b.ts")) >= 0.9)
+      .select(col("a.doc_id"), col("b.doc_id"))
+    val p = pred.queryExecution.optimizedPlan.toString
+    assert(p.contains("sorted_array_jaccard_at_least"),
+      s"predicate site not rewritten:\n$p")
+    assert(p.contains("size("), s"size inference lost by the rewrite:\n$p")
+    // value site: jaccard emitted as a column — must NOT rewrite
+    val emit = docs.alias("a").join(docs.alias("b"), col("a.doc_id") < col("b.doc_id"))
+      .select(SortedArrayJaccard(col("a.ts"), col("b.ts")).as("jaccard"))
+    val pe = emit.queryExecution.optimizedPlan.toString
+    assert(!pe.contains("sorted_array_jaccard_at_least"),
+      s"value-emitting site wrongly rewritten:\n$pe")
+    // end-to-end: rewritten query ≡ the same query with both rules
+    // excluded for its planning only
+    val n = pred.count()
+    val excluded = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(excluded)
+    spark.conf.set(excluded, Seq(InferJaccardSizeFilter, RewriteJaccardThresholdPredicate)
+      .map(_.ruleName).mkString(","))
+    val (nPlain, plainPlan) =
+      try { val q = pred; (q.count(), q.queryExecution.optimizedPlan.toString) }
+      finally prev.fold(spark.conf.unset(excluded))(spark.conf.set(excluded, _))
+    assert(!plainPlan.contains("sorted_array_jaccard_at_least"),
+      s"excluded rewrite still applied:\n$plainPlan")
+    assert(n == nPlain, s"rewrite changed results: $n vs $nPlain")
+  }
+
+  test("NaN and infinite thresholds keep their plan and match the plain comparison") {
+    import spark.implicits._
+    // cached, so the filters run as generated code rather than being
+    // folded into a local relation at optimization
+    val df = fixtures.toDF("x", "y").cache()
+    val jaccards = df.select(SortedArrayJaccard(col("x"), col("y"))).collect().map(_.getDouble(0))
+    // a kernel whose generated Java does not compile fails the query
+    // instead of falling back to interpreted evaluation
+    val fallback = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(fallback)
+    spark.conf.set(fallback, "false")
+    try for (c <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity);
+             strict <- Seq(false, true)) {
+      val jac = SortedArrayJaccard(col("x"), col("y"))
+      val q = df.filter(if (strict) jac > c else jac >= c)
+      val p = q.queryExecution.optimizedPlan.toString
+      assert(!p.contains("sorted_array_jaccard_at_least"),
+        s"threshold=$c strict=$strict rewritten:\n$p")
+      // Spark orders NaN above every double, as java.lang.Double.compare does
+      val expected = jaccards.count { j =>
+        val cmp = java.lang.Double.compare(j, c)
+        if (strict) cmp > 0 else cmp >= 0
+      }
+      assert(q.count() == expected, s"threshold=$c strict=$strict")
     } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(r =>
-          r == InferJaccardSizeFilter || r == RewriteJaccardThresholdPredicate)
+      prev.fold(spark.conf.unset(fallback))(spark.conf.set(fallback, _))
+      df.unpersist()
     }
   }
 }
