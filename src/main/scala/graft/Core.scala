@@ -44,13 +44,14 @@ object Tables {
 
   /** The schema Spark would infer for `paths` (schema merging off, the
     * default), from the one file its inference touches: the first data
-    * file by path among the leaf files its file index lists (names
-    * starting `_` or `.` skipped, except `k=v` partition directories).
-    * Spark would read a `_metadata` summary first, but it writes none
-    * by default and nothing here writes one. Partition columns are left
-    * to the reader's own partition discovery, as with inference. With
-    * no file to read (or a missing path), Spark's inference runs and
-    * fails as it would.
+    * file by path among the leaf files its file index lists (Spark's
+    * own name rule, through `ListingBridge`). Spark would read a
+    * `_metadata` or `_common_metadata` summary first, but it writes
+    * none by default and nothing here writes one, so the summaries are
+    * only dropped from the data files, as Spark drops them. Partition
+    * columns are left to the reader's own partition discovery, as with
+    * inference. With no file to read (or a missing path), Spark's
+    * inference runs and fails as it would.
     */
   private[graft] def footerSchema(spark: SparkSession, paths: Seq[String]): StructType = {
     import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -59,13 +60,13 @@ object Tables {
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
       ParquetFooterReader, ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.graft.ListingBridge
     val hadoopConf = spark.sessionState.newHadoopConf()
-    def listed(name: String) =
-      !(name.startsWith("_") && !name.contains("=") || name.startsWith(".") ||
-        name.endsWith("._COPYING_"))
+    def summary(f: FileStatus) =
+      Set("_metadata", "_common_metadata").contains(f.getPath.getName)
     def leaves(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
       if (st.isDirectory)
-        fs.listStatus(st.getPath).toSeq.filter(c => listed(c.getPath.getName))
+        fs.listStatus(st.getPath).toSeq.filterNot(c => ListingBridge.skipped(c.getPath.getName))
           .flatMap(leaves(fs, _))
       else Seq(st)
     val files = paths.flatMap { p =>
@@ -73,7 +74,7 @@ object Tables {
       val fs = path.getFileSystem(hadoopConf)
       if (fs.exists(path)) leaves(fs, fs.getFileStatus(path)) else Nil
     }
-    files.sortBy(_.getPath.toString).headOption match {
+    files.filterNot(summary).sortBy(_.getPath.toString).headOption match {
       case Some(f) =>
         val footer = ParquetFooterReader.readFooter(
           HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)

@@ -19,14 +19,19 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
   * full computation of it (q64's JSON scan ran twice this way). With
   * `RangePartitioning(order, 1)` the partitioner has no bounds to pick
   * and samples nothing; the sort's output is the same rows in the same
-  * order, in the one partition AQE would have coalesced it to anyway.
+  * order. The trade: one range exchange instead of a second full
+  * computation of the input, paid for with a single sort task. An input
+  * larger than AQE's advisory partition size (a one-split scan holds up
+  * to `maxPartitionBytes`, and a broadcast join's streamed side can fan
+  * out past that) would have been sorted in two or more reduce tasks;
+  * here it is sorted in one.
   *
   * Fires only when the exchange's input is provably one partition: a
   * narrow chain — filters and projections over a file scan, or the
   * streamed side of a broadcast hash join — down to a scan whose own
-  * `inputRDD` (the RDD it executes) has one partition. Spark's split
-  * size already caps such a scan at `maxPartitionBytes`, so there is no
-  * size threshold. Only `ENSURE_REQUIREMENTS` exchanges are touched;
+  * `inputRDD` (the RDD it executes) has one partition. There is no size
+  * threshold: Spark's split size already caps such a scan's input at
+  * `maxPartitionBytes`. Only `ENSURE_REQUIREMENTS` exchanges are touched;
   * a user's `repartitionByRange` keeps its partition count.
   */
 object OnePartitionSortExchange extends Rule[SparkPlan] {

@@ -25,11 +25,8 @@ object TestSession {
     s
   }
 
-  /** The generated fixtures (TESTDATA.md): `SPARK_GRAFT_TESTDATA`,
-    * else `~/testdata`.
-    */
-  val testdata: String =
-    sys.env.getOrElse("SPARK_GRAFT_TESTDATA", s"${sys.props("user.home")}/testdata")
+  /** The generated fixtures (TESTDATA.md). */
+  val testdata = "/root/testdata"
 
   /** The fixture directory of scale factor `sf`, e.g. `fixture("0.001")`. */
   def fixture(sf: String): String = s"$testdata/sf$sf"
