@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with total + per-query wall
   * seconds over `SPARK_GRAFT_SF_DIR`. A small untimed warmup first
   * (tiny scan + one trivial agg) pays the session/codegen
@@ -11,19 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core on the box (the driver machine is 32-way);
-    // an explicit SPARK_GRAFT_CPUS still wins for dev runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same planner as Verify: functions + threshold-inference rules
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runeset.host.buildSession()
 
     // untimed warmup: JIT + codegen + parquet footer caches, including
     // the md5/higher-order/codegen-kernel paths the (alphabetically
@@ -209,12 +195,7 @@ object Bench {
           // old loop broke on a first-run failure and never retried)
           System.err.println(s"[bench] $name failed (run $run): ${e.getMessage}")
         }
-        spark.catalog.clearCache() // queries may cache; don't leak across timings
-        // also drop localCheckpoint blocks (clearCache doesn't): the
-        // propagation queries leave one per round and the orphans skew
-        // later timings via memory pressure
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        Runeset.releaseCaches(spark) // queries may cache; don't leak across timings
       }
       (name, if (successes > 0) best else -1.0, successes > 0)
     }

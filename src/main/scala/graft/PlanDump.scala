@@ -1,7 +1,7 @@
 package graft
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]").config("spark.sql.shuffle.partitions","4").config("spark.ui.enabled","false").config("spark.sql.session.timeZone","UTC").withExtensions(new graft.functions.GraftExtensions).getOrCreate()
+    val spark = Runeset.host.buildSession()
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- args) {
       println(s"===== $n")

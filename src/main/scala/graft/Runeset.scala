@@ -8,6 +8,12 @@ import org.apache.spark.sql.SparkSession
   * build), feeding session construction. Spells get their config via
   * `spellConf` — the reference passes the runeset's per-spell table
   * to `prepare(config)` (docunomicon/README.md:35-47).
+  *
+  * `buildSession` is the one place a SparkSession is built: the mains
+  * take [[Runeset.host]] (or the `local[4]` default) and the test
+  * suites take `TestSession.spark`, so every session gets graft's
+  * planner — functions, optimizer rules and the physical rule —
+  * injected when it is built.
   */
 final case class Runeset(
     master: String = "local[4]",
@@ -16,18 +22,40 @@ final case class Runeset(
     maxHops: Int = graft.engine.SpellEngine.RunawayLoopBound,
     spellConf: Map[String, Map[String, String]] = Map.empty) {
 
-  def buildSession(appName: String = "graft"): SparkSession =
-    SparkSession.builder()
+  def buildSession(): SparkSession = {
+    val spark = SparkSession.builder()
       .master(master)
-      .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", timezone)
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }
 
 object Runeset {
+
+  /** Every core of the host (the driver machine is 32-way), one
+    * shuffle partition per core; `SPARK_GRAFT_CPUS` overrides the
+    * count for dev runs.
+    */
+  def host: Runeset = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    Runeset(master = s"local[$cpus]", shufflePartitions = cpus)
+  }
+
+  /** Drops every cached table and every persisted RDD between queries.
+    * `clearCache` alone leaves `localCheckpoint` blocks: the
+    * propagation queries leave one per round, and the orphans skew
+    * later timings through memory pressure.
+    */
+  def releaseCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  }
 
   /** Parse `key = value` lines; `spell.<name>.<key> = v` nests into
     * that spell's config table. '#' starts a comment.

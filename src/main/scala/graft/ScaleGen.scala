@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-probe corpus generator: derives an N× corpus from a driver
@@ -47,15 +46,8 @@ object ScaleGen {
     val factor = factorStr.toInt
     val tables = sys.env.getOrElse("SPARK_GRAFT_SCALEGEN_TABLES",
       "documents,embeddings").split(",").map(_.trim).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val host = Runeset.host
+    val spark = host.buildSession()
 
     val reps = spark.range(factor).toDF("rep")
 
@@ -79,7 +71,7 @@ object ScaleGen {
           col("ts"),
           (col("user_id") + col("rep") * userStride).as("user_id"),
           col("event_type"), col("value"), col("props"))
-        .repartition(cpus.toInt)
+        .repartition(host.shufflePartitions)
         .write.mode("overwrite").parquet(s"$outDir/events.parquet")
       println(s"""{"events":${nEv * factor},"out":"$outDir"}""")
     }
@@ -98,7 +90,7 @@ object ScaleGen {
           .as("text"),
         col("lang"), col("source"), col("n_chars"))
       .withColumn("n_chars", length(col("text")).cast("int"))
-      .repartition(cpus.toInt)
+      .repartition(host.shufflePartitions)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
 
     val emb = Tables.parquet(spark, s"$srcDir/embeddings.parquet")
@@ -114,7 +106,7 @@ object ScaleGen {
         rotated.as("embedding"), col("label"))
     }.reduce(_ union _)
     shifted
-      .repartition(cpus.toInt)
+      .repartition(host.shufflePartitions)
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
 
     println(s"""{"docs":${nDocs * factor},"vecs":${nVecs * factor},"out":"$outDir"}""")

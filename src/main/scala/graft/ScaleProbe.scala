@@ -511,17 +511,7 @@ object ScaleProbe {
       val Array(label, dir) = a.split("=", 2); (label, dir)
     }
     require(scales.nonEmpty, "usage: ScaleProbe <label=dir> [<label=dir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same planner as Verify: functions + threshold-inference rules
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runeset.host.buildSession()
 
     // JIT/codegen warmup outside the measurements (Bench's pattern)
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -538,12 +528,7 @@ object ScaleProbe {
           System.err.println(s"[scale] $name failed: ${e.getMessage}")
           (-1.0, -1L)
         }
-      spark.catalog.clearCache()
-      // clearCache drops table caches but NOT localCheckpoint blocks;
-      // the propagation queries leave one per round, and the orphans
-      // accumulate memory pressure that skews later queries' timings
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Runeset.releaseCaches(spark)
       (name, sec, rows)
     }
 

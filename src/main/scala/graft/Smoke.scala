@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local replica of the driver's t1 smoke: `SparkEntry.entry` on a
-  * fresh session (no special conf, like the driver's) must return >0
+  * `Runeset()` session (local[4], UTC, GraftExtensions) must return >0
   * rows on sf0.001.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runeset().buildSession()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"ENTRY_ROWS=$n")

@@ -1,14 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: registers graft's native
   * expressions as SQL functions so `spark.sql("… float_vec_dot(a,b)
-  * …")` works, not just the Column API. Install with
-  * `.withExtensions(new GraftExtensions)` at session build, or call
-  * `GraftExtensions.register(spark)` on a live session.
+  * …")` works, not just the Column API, and injects graft's optimizer
+  * and physical rules. `Runeset.buildSession` installs it with
+  * `.withExtensions(new GraftExtensions)` on every session it builds.
   *
   * This is the (a)/(b) tier of the custom-operator ladder — scalar
   * codegen expressions, plus optimizer rules and one physical
@@ -134,10 +134,7 @@ object GraftExtensions {
           s"winnow_mins expects 3 arguments (array<string>, int constant n, int constant w), got ${exprs.size}")
       }))
 
-  /** The optimizer rules GraftExtensions installs — the same list for
-    * both installation paths, so a live-session `register` and a
-    * session-build `.withExtensions` produce the same planner.
-    */
+  /** The optimizer rules GraftExtensions installs, in order. */
   val optimizerRules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
     // order matters within the fixpoint batch: InferJaccardSizeFilter
@@ -149,31 +146,9 @@ object GraftExtensions {
       graft.plans.RewriteJaccardThresholdPredicate)
 
   /** The physical rules GraftExtensions installs into adaptive query
-    * planning, after `EnsureRequirements` — again one list for both
-    * installation paths.
+    * planning, after `EnsureRequirements`.
     */
   val queryStagePrepRules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
     org.apache.spark.sql.execution.SparkPlan]] =
     Seq(graft.plans.OnePartitionSortExchange)
-
-  /** Register on an existing session (e.g. one the driver built):
-    * functions into the registry, optimizer rules into
-    * `spark.experimental.extraOptimizations` (the live-session analog
-    * of `injectOptimizerRule` — both run after the stable optimizer
-    * batches), query-stage preparation rules through
-    * [[org.apache.spark.sql.graft.PlannerBridge]] (a live session has
-    * no public door for physical rules). Idempotent: the optimizer
-    * rules end the list once each, in the order above, wherever they
-    * stood before — InferJaccardSizeFilter must precede the rewrite
-    * that consumes its pattern.
-    */
-  def register(spark: SparkSession): Unit = {
-    definitions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(optimizerRules.contains) ++ optimizerRules
-    org.apache.spark.sql.graft.PlannerBridge.addQueryStagePrepRules(spark, queryStagePrepRules)
-  }
 }

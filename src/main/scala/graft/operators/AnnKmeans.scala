@@ -503,9 +503,8 @@ object AnnKmeans {
     *     appended to ONLY the touched `cell=` partitions
     *     (mode=append under partitionBy; the d16 delta discipline) —
     *     ingest cost ∝ touched partitions = min(|delta|, k), never
-    *     ∝ corpus (the probe artifact carries n_touched_cells so the
-    *     cost driver is visible; at a production daily delta ≫ k the
-    *     bound is k appended files, each amortizing many rows).
+    *     ∝ corpus (at a production daily delta ≫ k the bound is k
+    *     appended files, each amortizing many rows).
     *     [[s25IngestDelta]]
     *     `require`s untouched cell partitions kept their exact file
     *     sets and no base file was rewritten (AnnIncrementalSpec
@@ -540,14 +539,11 @@ object AnnKmeans {
     s24Probe(s, d, idxPath, centPath)
   }
 
-  /** s25's build + delta ingest, factored for the spec and the scale
-    * probe. `deltaN` fixes the delta's absolute row count (None → the
-    * corpus tail, ~10%). Returns (index path, model path, the drift
+  /** s25's build + delta ingest, factored for the spec. The delta is
+    * the corpus tail, ~10%. Returns (index path, model path, the drift
     * frame: cell, n_build, n_after, drift, retrain).
     */
-  private[graft] def s25IngestDelta(s: org.apache.spark.sql.SparkSession,
-      d: String, k: Int = K, deltaN: Option[Long] = None,
-      timings: Option[scala.collection.mutable.Map[String, Double]] = None)
+  private[graft] def s25IngestDelta(s: org.apache.spark.sql.SparkSession, d: String)
       : (String, String, DataFrame) = {
     import s.implicits._
     val base = StreamReplay.tempReplayDir("s25idx")
@@ -555,11 +551,10 @@ object AnnKmeans {
     val centPath = base.resolve("centroids").toString
     val emb = Tables.embeddings(s, d)
     val maxId = emb.agg(max(col("vec_id"))).head().getLong(0) // one number
-    val cut = maxId + 1 - deltaN.getOrElse(math.max(1L, (maxId + 1) / 10))
-    require(cut > 0, s"delta ${deltaN} swallows the whole corpus")
-    val tBuild = System.nanoTime()
+    val cut = maxId + 1 - math.max(1L, (maxId + 1) / 10)
+    require(cut > 0, "the delta swallows the whole corpus")
     // ---- nightly base build (amortized): pre-delta corpus only ----
-    val cents = trainedLiteralModel(s, d, k)
+    val cents = trainedLiteralModel(s, d, K)
     cents.toDF("cid", "cent").coalesce(1)
       .write.mode("overwrite").parquet(centPath)
     assignLiteral(emb.filter(col("vec_id") < cut), cents)
@@ -577,14 +572,11 @@ object AnnKmeans {
     val buildMeans = cellMeans(Tables.parquet(s, idxPath))
       .withColumnsRenamed(Map("ssum" -> "ssum_b", "n" -> "n_build"))
       .localCheckpoint() // pre-ingest snapshot: must not re-read post-append
-    timings.foreach(_.put("build_sec", (System.nanoTime() - tBuild) / 1e9))
     // ---- delta ingest: fixed persisted model, append-only ----------
     // the before/after per-cell file listings are AUDIT apparatus for
     // the append-only requires below (a real lakehouse writer gets
     // immutability from its commit protocol, not by re-listing the
-    // table) and they cost ∝ k cell dirs — so they sit OUTSIDE the
-    // timed ingest window, which covers exactly the production work:
-    // delta assignment, cell routing, and the partition append.
+    // table); they cost ∝ k cell dirs.
     val idxRoot = new org.apache.hadoop.fs.Path(idxPath)
     val fs = idxRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
     def cellFiles(): Map[String, Set[String]] =
@@ -598,15 +590,13 @@ object AnnKmeans {
     // the delta FEED: in production the new embeddings arrive as
     // their own batch — they are not filtered back out of the corpus.
     // Staging them to their own file is fixture prep (c28's "request
-    // generation is the caller's feed, not the commit"), so it sits
-    // outside the timed window too: with it inside, the timing was
-    // 3 full-corpus scans (filter → distinct → write re-derivations)
-    // and read ∝ corpus (0.8→2.1→6.4 s across decades for the same
-    // 500-row delta) instead of ∝ delta.
+    // generation is the caller's feed, not the commit"): the ingest
+    // then reads ∝ delta, where filtering the corpus cost 3
+    // full-corpus scans (filter → distinct → write re-derivations),
+    // 0.8→2.1→6.4 s across decades for the same 500-row delta.
     val deltaPath = base.resolve("delta_feed").toString
     emb.filter(col("vec_id") >= cut)
       .coalesce(1).write.mode("overwrite").parquet(deltaPath)
-    val tIngest = System.nanoTime()
     val modelRead = centsDf.as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
     val delta = assignLiteral(Tables.parquet(s, deltaPath), modelRead)
       .withColumn("nrm", norm(col("embedding")))
@@ -614,7 +604,6 @@ object AnnKmeans {
       .collect().map(_.getLong(0)).map(c => s"cell=$c").toSet // ≤ k ids
     delta.repartition(col("cell"))
       .write.partitionBy("cell").mode("append").parquet(idxPath)
-    timings.foreach(_.put("ingest_sec", (System.nanoTime() - tIngest) / 1e9))
     val after = cellFiles()
     before.foreach { case (cell, fset) =>
       require(fset.subsetOf(after(cell)),
@@ -651,36 +640,6 @@ object AnnKmeans {
           / Scale.toDouble).as("drift"))
       .withColumn("retrain", col("drift") > lit(0.05))
     (idxPath, centPath, drift)
-  }
-
-  /** s25's decade decomposition for the scale probe: base build
-    * (amortized), DELTA INGEST at a FIXED delta size (the flat line
-    * across corpus decades is the measured cost-∝-delta claim), and
-    * the post-ingest pruned probe.
-    */
-  private[graft] def s25ProbeStats(s: org.apache.spark.sql.SparkSession,
-      d: String, deltaRows: Long = 500L): DataFrame = {
-    import s.implicits._
-    val k = derivedK(s, d)
-    val t = scala.collection.mutable.Map.empty[String, Double]
-    val (idxPath, centPath, drift) =
-      s25IngestDelta(s, d, k, Some(deltaRows), Some(t))
-    val driftRows = drift.collect()
-    val nDrift = driftRows.length.toLong
-    // ingest cost tracks TOUCHED PARTITIONS = min(|delta|, k) — one
-    // appended file per delta-receiving cell (the per-file committer
-    // constant is the whole cost; data volume is the fixed delta).
-    // Surfacing the count makes the driver visible in the artifact:
-    // corpus 100× ⇒ touched cells 8→79→~440 (saturating at |delta|),
-    // never ∝ corpus.
-    val nTouched = driftRows.count(r => r.getLong(2) > r.getLong(1)).toLong
-    val t1 = System.nanoTime()
-    val probed = s24Probe(s, d, idxPath, centPath, queryMax = 10).count()
-    val probeSec = (System.nanoTime() - t1) / 1e9
-    Seq((k, nDrift, nTouched, probed, t("build_sec"), t("ingest_sec"),
-        probeSec))
-      .toDF("k", "n_cells", "n_touched_cells", "rows_q10", "build_sec",
-        "ingest_sec", "probe_sec")
   }
 
   // ---- s26: product quantization + ADC ------------------------------

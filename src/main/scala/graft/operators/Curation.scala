@@ -352,52 +352,6 @@ object Curation {
       .select(col("doc_id") +: carry.map(col): _*)
   }
 
-  /** r16 MEASUREMENT-ONLY stage cuts of the c02 kernel build
-    * (mirrors [[nearDupComponentFrom]]'s internals; keep in sync) —
-    * used by ProbeR16 to find where the kept-manifest build time goes.
-    */
-  private[graft] def kernelProbeStages(s: SparkSession, d: String)
-      : Seq[(String, () => DataFrame)] = {
-    def keepers = exactKeepers(qualityDocs(s, d))
-    def ksets = graft.Tables.spreadHeavy(keepers)
-      .select(col("doc_id"), col("lang"), col("quality"),
-        array_sort(tokenSet(col("text"))).as("ts"))
-      .withColumn("set_hash", md5(concat_ws(" ", col("ts"))))
-    val sigs8 = graft.functions.MinHashSigs(col("ts"), 8)
-    def sets = graft.Tables.spreadHeavy(ksets.groupBy(col("set_hash"))
-        .agg(min(col("doc_id")).as("rep_id"), first(col("ts")).as("ts")))
-      .select(col("rep_id") +: col("ts") +:
-        (0 until 8).map(i => element_at(sigs8, i + 1).as(s"mh$i")): _*)
-    val bandArr = array((0 until 2).map(i =>
-      md5(concat(col(s"mh${4 * i}"), col(s"mh${4 * i + 1}"),
-        col(s"mh${4 * i + 2}"), col(s"mh${4 * i + 3}")))): _*)
-    def lb(ts: Column): Column = {
-      val n = greatest(size(ts), lit(1))
-      floor(log(10.0 / 9.0, n.cast("double"))).cast("int")
-    }
-    def bands = sets.select(col("rep_id"), col("ts"),
-      posexplode(bandArr).as(Seq("band", "h")))
-      .withColumn("lb", lb(col("ts")))
-    def edges = bands.alias("a")
-      .join(bands.withColumn("lb", explode(array(col("lb") - 1, col("lb"), col("lb") + 1))).alias("b"),
-        col("a.band") === col("b.band") && col("a.h") === col("b.h")
-          && col("a.lb") === col("b.lb")
-          && col("a.rep_id") < col("b.rep_id"))
-      .filter(size(col("a.ts")) * 10 >= size(col("b.ts")) * 9
-        && size(col("b.ts")) * 10 >= size(col("a.ts")) * 9)
-      .select(col("a.rep_id").as("id_a"), col("b.rep_id").as("id_b"),
-        graft.functions.SortedArrayJaccard(col("a.ts"), col("b.ts")).as("jaccard"))
-      .filter(col("jaccard") >= 0.9)
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    Seq(
-      "1_keepers" -> (() => keepers),
-      "2_ksets" -> (() => ksets),
-      "3_sets" -> (() => sets),
-      "4_edges" -> (() => edges),
-      "5_full_kernel" -> (() => nearDupKeptFrom(keepers, "kernel_probe")))
-  }
-
   /** c01 + the near-dup collapse stage: quality-filter → exact-dedup
     * keeper → MinHash-LSH near-dup *cluster* keeper (one doc per
     * connected component of the Jaccard ≥ 0.9 graph, d03's banded
@@ -2434,17 +2388,12 @@ object Curation {
       |GROUP BY seg ORDER BY seg""".stripMargin
   ) { (s, d) => c31Snapshot(s, d)._1 }
 
-  /** c31's builder + reader, factored so the scale probe can time the
-    * phases separately. Returns (the pruned-scan DataFrame, the
+  /** c31's builder + reader, factored for the plan spec. Returns (the pruned-scan DataFrame, the
     * number of tail commits the reader replayed past the checkpoint,
     * the number of live files the stats skipped).
     */
-  private[graft] def c31Snapshot(s: SparkSession, d: String,
-      extraCommits: Int = 0,
-      timings: Option[scala.collection.mutable.Map[String, Double]] = None)
-      : (DataFrame, Int, Int) = {
+  private[graft] def c31Snapshot(s: SparkSession, d: String): (DataFrame, Int, Int) = {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    val tBuild = System.nanoTime()
     val base = StreamReplay.tempReplayDir("c31")
     val files = base.resolve("files").toString
     val logDir = base.resolve("_log")
@@ -2514,25 +2463,11 @@ object Curation {
       commit(addJson("seg3_rw", segStats(3L)),
         l => require(l.put("seg3_rw", segStats(3L)).isEmpty, "rewrite re-adds")): Unit
     }
-    // optional filler commits (scale probe: log-length sweep) — each
-    // a self-cancelling add+remove pair (log-only paths: the stats
-    // carry seg 0's range, so no scan under the probe predicate ever
-    // dereferences them), so the final live set is invariant
-    require(extraCommits % 2 == 0, "extraCommits must pair add+remove")
-    (0 until extraCommits).foreach { i =>
-      val churnStats = segStats(presentSegs.head)
-      if (i % 2 == 0) commit(addJson(s"churn_$i", churnStats),
-        l => require(l.put(s"churn_$i", churnStats).isEmpty, "churn re-adds")): Unit
-      else commit(s"""{"action":"remove","path":"churn_${i - 1}"}""",
-        l => require(l.remove(s"churn_${i - 1}").nonEmpty, "churn removes unknown")): Unit
-    }
     // a short log may never cross a checkpoint boundary — close with
     // one at the final commit (writer policy; the reader contract —
     // one checkpoint + a shorter-than-interval tail — is unchanged)
     if (ckptAt < 0) writeCheckpoint(nextV - 1)
     val nCommits = nextV
-    timings.foreach(_.put("build_sec", (System.nanoTime() - tBuild) / 1e9))
-    val tReader = System.nanoTime()
     // ---- the reader: ONE checkpoint + the tail, never v0 ----------
     val fs = new org.apache.hadoop.fs.Path(logDir.toString)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -2587,8 +2522,6 @@ object Curation {
     require(skipped.nonEmpty && skipped.forall {
       case (_, (mn, mx, _)) => mx < lo || mn > hi
     }, "stats skipping: nothing skipped, or a skipped file overlaps the range")
-    timings.foreach(_.put("reader_sec", (System.nanoTime() - tReader) / 1e9))
-    val tScan = System.nanoTime()
     val predicted = scanFiles.map(_._2._3).sum
     val snap = (if (scanFiles.isEmpty)
         // every live file pruned (a sparse corpus can leave segments
@@ -2599,7 +2532,6 @@ object Curation {
       .filter(col("doc_id").between(lo, hi))
     require(snap.count() == predicted,
       s"stats-predicted $predicted rows != scanned count — stats are stale")
-    timings.foreach(_.put("scan_sec", (System.nanoTime() - tScan) / 1e9))
     val out = snap
       .groupBy(floor(col("doc_id") / width.toDouble).cast("long").as("seg"))
       .agg(count(lit(1)).as("n_docs"), txlogDigest.as("content_xor"),

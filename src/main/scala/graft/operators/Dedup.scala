@@ -552,9 +552,6 @@ object Dedup {
       converged = prevFp != null && prevFp == fp
       prevFp = fp
       mPrev = m
-      if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-        System.err.println(s"[labels] $query round=$round n=${r.getLong(2)} " +
-          s"t=${System.nanoTime() / 1e9}")
     }
     if (!converged) throw new IllegalStateException(
       s"$query: min-label propagation not converged after $rounds rounds; " +

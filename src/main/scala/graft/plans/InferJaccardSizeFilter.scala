@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.DoubleType
   * the rule is safe at any position in the optimizer. Idempotent via
   * a semantic-equality check against existing conjuncts.
   *
-  * Register with `GraftExtensions` (session build) or
-  * `spark.experimental.extraOptimizations` (live session).
+  * `GraftExtensions` injects it into every session `Runeset.buildSession`
+  * builds.
   */
 object InferJaccardSizeFilter extends Rule[LogicalPlan] with PredicateHelper {
 

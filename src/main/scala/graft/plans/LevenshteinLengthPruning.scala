@@ -40,9 +40,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * idempotent via a semantic-equality check against existing
   * conjuncts, and deduplicated within a single pass so two identical
   * thresholds in one predicate infer one bound, not two. Installed in
-  * every driver-shaped session (`Verify`/`Bench`/`Smoke`/
-  * `ScaleProbe`/`PlanDump` build `.withExtensions(GraftExtensions)`)
-  * and on live sessions via `GraftExtensions.register`.
+  * every session `Runeset.buildSession` builds, through
+  * `GraftExtensions`.
   */
 object LevenshteinLengthPruning extends Rule[LogicalPlan] with PredicateHelper {
 

@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ApproxAccuracySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   test("approx_count_distinct tracks exact distinct counts within tolerance") {
     val dir = "/root/testdata/sf0.01"

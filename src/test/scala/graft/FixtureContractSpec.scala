@@ -17,12 +17,7 @@ class FixtureContractSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   private def names(t: String): Seq[String] =
     Tables.read(spark, dir, t).schema.fields.map(_.name).toSeq

@@ -14,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NormalizeTsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   // instants spanning epoch, a round second, and a realistic 2025 µs
   private val micros = Seq(0L, 1000000L, 1755000000123456L)

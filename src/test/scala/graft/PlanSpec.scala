@@ -14,7 +14,7 @@ class PlanSpec extends AnyFunSuite {
   // Verify-shaped planner: every Bench/Verify session installs
   // GraftExtensions (functions, threshold-inference optimizer rules,
   // the one-partition sort rule), so the pins here must hold under the
-  // same rules — TestSession registers them on the shared session
+  // same rules — the shared session is built with them
   lazy val spark: SparkSession = TestSession.spark
 
   private val dir = TestSession.fixture("0.001")

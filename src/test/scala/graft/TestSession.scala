@@ -1,28 +1,27 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** The suites' shared session and fixture config. One JVM runs every
-  * suite, and `getOrCreate` hands each the same session, so the specs
-  * that pin planner behaviour take it from here: local[4], four shuffle
-  * partitions, UTC, with GraftExtensions registered through the
-  * live-session path — the planner Bench and Verify sessions have.
+  * suite, and `getOrCreate` hands each the same session, so every suite
+  * takes it from here: `Runeset()`'s local[4], four shuffle partitions
+  * and UTC, with GraftExtensions injected when the session is built —
+  * the planner Bench and Verify sessions have.
   */
 object TestSession {
 
-  /** The session, registered afresh on each call: suites that toggle a
-    * single rule on the shared session (the rule specs) may have left
-    * GraftExtensions' rules missing or out of order.
+  def spark: SparkSession = Runeset().buildSession()
+
+  /** Runs `body` with `rules` excluded from the optimizer — the plain
+    * baseline a rule spec compares against — and restores the previous
+    * exclusion list after, so nothing leaks into later suites.
     */
-  def spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftExtensions.register(s)
-    s
+  def withoutRules[T](spark: SparkSession, rules: Rule[_]*)(body: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, rules.map(_.ruleName).mkString(","))
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** The generated fixtures (TESTDATA.md). */

@@ -7,11 +7,7 @@ import EValue._
 
 class EventBridgeSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private val schema = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", TimestampType),

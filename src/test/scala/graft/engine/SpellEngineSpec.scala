@@ -149,11 +149,7 @@ class SpellEngineSpec extends AnyFunSuite {
   }
 
   test("castAll: each Dataset row runs its own bounded feedback loop") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.TestSession.spark
     implicit val enc: org.apache.spark.sql.Encoder[DynEvent] =
       org.apache.spark.sql.Encoders.kryo[DynEvent]
     val seeds = spark.createDataset(Seq(
@@ -169,8 +165,7 @@ class SpellEngineSpec extends AnyFunSuite {
   }
 
   test("route: multi-spell topic subscriptions (roadmap 2B)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.TestSession.spark
     implicit val enc: org.apache.spark.sql.Encoder[DynEvent] =
       org.apache.spark.sql.Encoders.kryo[DynEvent]
     val evs = spark.createDataset(Seq(
@@ -216,8 +211,7 @@ class SpellEngineSpec extends AnyFunSuite {
   }
 
   test("castAllMetered reports in/out counts and cast time via accumulators") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.TestSession.spark
     implicit val enc: org.apache.spark.sql.Encoder[DynEvent] =
       org.apache.spark.sql.Encoders.kryo[DynEvent]
     val metrics = SpellEngine.SpellMetrics.create(spark, "decrement")
@@ -230,8 +224,7 @@ class SpellEngineSpec extends AnyFunSuite {
   }
 
   test("castAll runs the L1 lifecycle once per partition, not per event") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.TestSession.spark
     implicit val enc: org.apache.spark.sql.Encoder[DynEvent] =
       org.apache.spark.sql.Encoders.kryo[DynEvent]
     LifecycleCountingSpell.prepares.set(0)

@@ -5,13 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("kernels are callable from SQL after registration") {
-    GraftExtensions.register(spark)
     val dot = spark.sql(
       "SELECT float_vec_dot(array(cast(1.0 as float), cast(2.0 as float)), " +
         "array(cast(3.0 as float), cast(4.0 as float))) AS d")
@@ -24,7 +20,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("simhash_bits kernel is bit-equal to the declarative per-bit spelling") {
-    GraftExtensions.register(spark)
     // real corpus + hand-picked edge cases (empty-string token, single
     // token, duplicate-free long set)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -39,7 +34,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("max_dup_count kernel equals the declarative distinct×filter spelling") {
-    GraftExtensions.register(spark)
     val arrays = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("split(text, ' ') AS xs")
       .union(spark.sql("SELECT array('a','a','a') AS xs"))
@@ -54,7 +48,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("pii_scrub kernel equals the declarative regexp spelling") {
-    GraftExtensions.register(spark)
     // Spark SQL string literals eat one level of backslash
     val email = PiiScrub.EmailPattern.replace("\\", "\\\\")
     val phone = PiiScrub.PhonePattern.replace("\\", "\\\\")
@@ -87,7 +80,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("roll_hash kernel equals the declarative fold spelling") {
-    GraftExtensions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("split(text, ' ') AS tk")
       .union(spark.sql("SELECT array('') AS tk"))
@@ -99,7 +91,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("64-bit simhash: low 32 bits equal the 32-bit hash; high bits populated") {
-    GraftExtensions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("array_distinct(split(text, ' ')) AS ts")
     // bits 0..31 use the identical rule in both widths, so they must agree
@@ -115,7 +106,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("const-int k accepts BIGINT and foldable literals, rejects non-constants") {
-    GraftExtensions.register(spark)
     // 8L (BIGINT literal) and a foldable expression both fold to the same kernel
     val r = spark.sql(
       "SELECT minhash_sigs(array('a','b'), 8L) AS l, " +
@@ -133,7 +123,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("word_grams kernel equals the declarative shingle spelling") {
-    GraftExtensions.register(spark)
     // real corpus + the guard edge cases (exactly n−1, exactly n,
     // duplicate-heavy tokens)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -157,7 +146,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("word_grams_multi kernel keeps multiplicity and equals the non-distinct spelling") {
-    GraftExtensions.register(spark)
     // real corpus + edge cases: exactly n−1 (empty), exactly n (one
     // gram), repeated tokens (the case distinct would collapse), null
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -179,7 +167,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("winnow_mins kernel equals the declarative winnowing spelling") {
-    GraftExtensions.register(spark)
     // real corpus + edge cases: exactly n−1 tokens (no grams), exactly
     // n (one gram, short-window min), n+w−2 (one short window),
     // n+w−1 (first full window), duplicate-heavy (tied minima), null
@@ -211,7 +198,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("quality_score kernel equals the declarative lambda spelling bit-for-bit") {
-    GraftExtensions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("split(text, ' ') AS tk")
       .union(spark.sql("SELECT array('') AS tk")) // empty-text split
@@ -231,21 +217,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(spark.sql("SELECT quality_score(array())").head().isNullAt(0))
   }
 
-  test("withExtensions installs the functions at session build") {
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .appName("graft-ext-test")
-      .getOrCreate()
-    // note: getOrCreate may reuse the suite session; register covers that
-    GraftExtensions.register(s2)
-    assert(s2.sql("SELECT float_vec_dot(array(cast(2.0 as float)), array(cast(5.0 as float)))")
-      .head().getDouble(0) == 10.0)
-  }
-
   test("nfc_normalize: composed/decomposed collapse, ascii fast-path identity, SQL registration") {
-    GraftExtensions.register(spark)
     // decomposed e + U+0301 composes to U+00E9; codepoint count drops
     val r = spark.sql(
       "SELECT nfc_normalize('e\u0301') = '\u00e9', length(nfc_normalize('e\u0301')), " +
@@ -256,16 +228,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(r.isNullAt(3))
   }
 
-  test("register installs the optimizer rules on a live session, idempotently") {
-    GraftExtensions.register(spark)
-    GraftExtensions.register(spark) // second call must not duplicate
-    val installed = spark.experimental.extraOptimizations
-    GraftExtensions.optimizerRules.foreach { r =>
-      assert(installed.count(_ == r) == 1,
-        s"expected exactly one copy of ${r.ruleName}, got ${installed.count(_ == r)}")
-    }
-    // the physical rules reach the live session's adaptive planner too,
-    // the same list `.withExtensions` injects at session build
+  test("the shared session holds each planner rule once, in order") {
+    val optimizer = spark.sessionState.optimizer.extendedOperatorOptimizationRules
+    assert(optimizer.filter(GraftExtensions.optimizerRules.contains) ==
+      GraftExtensions.optimizerRules, s"optimizer rules: ${optimizer.map(_.ruleName)}")
     val physical = spark.sessionState.adaptiveRulesHolder.queryStagePrepRules
     GraftExtensions.queryStagePrepRules.foreach { r =>
       assert(physical.count(_ == r) == 1,

@@ -14,11 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class KmvSketchSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def md5Hash60(s: String): Long = {
     val hex = java.security.MessageDigest.getInstance("MD5")

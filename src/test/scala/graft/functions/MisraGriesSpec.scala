@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MisraGriesSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("every item above the n/(k+1) line survives an 8-partition merge") {
     import spark.implicits._

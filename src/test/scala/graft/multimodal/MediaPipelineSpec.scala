@@ -5,11 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class MediaPipelineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("decode stage runs per-partition and emits typed features") {
     val feats = MediaPipeline.featureTable(spark, "/root/testdata/sf0.001")

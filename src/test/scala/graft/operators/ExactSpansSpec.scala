@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ExactSpansSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def spansOf(docs: Seq[(Long, String)]): Seq[(Long, Long, Long, Long, Long)] = {
     import spark.implicits._

@@ -17,11 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FilteredAnnSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   /** rows: (vec_id, hot-one vector scaled by sign, label) */
   private def annOf(rows: Seq[(Long, Array[Float], Int)]): Seq[(Long, Int, Long, Long, Int)] = {

@@ -28,12 +28,7 @@ class GraphAnnSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     super.afterAll()
   }
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class IncrementalIngestSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("c09 emits all four verdicts with exact taking precedence over near-dup") {
     import spark.implicits._

@@ -26,12 +26,7 @@ class KnnGraphSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     super.afterAll()
   }
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private case class Edge(src: Long, dst: Long, cell: Long, k: Int, mutual: Int)
 

@@ -15,11 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class LeakageSplitSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def splitsOf(docs: Seq[(Long, Array[Float])]): Map[Long, (Long, String)] = {
     import spark.implicits._

@@ -16,12 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PqAdcSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("s09 ADC top-5 recall@5 beats the random floor by >= 10x vs exact s01") {
     spark.sparkContext.setLogLevel("WARN")

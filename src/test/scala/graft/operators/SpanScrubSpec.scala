@@ -17,11 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SpanScrubSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def scrubOf(docs: Seq[(Long, String)]): Seq[(Long, Long, Long, String)] = {
     import spark.implicits._

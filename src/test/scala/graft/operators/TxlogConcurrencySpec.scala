@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TxlogConcurrencySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def freshLog(): java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory("graft_c30_")

@@ -21,12 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class WeightedReservoirSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private val prioritySql =
     "array_max(transform(sequence(1, weight), " +

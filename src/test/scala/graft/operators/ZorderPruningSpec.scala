@@ -18,12 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ZorderPruningSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("z-order prunes both range probes; linear layout only its sort column") {
     spark.sparkContext.setLogLevel("WARN")

@@ -7,11 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class InferJaccardSizeFilterSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def pairsDf = {
     import spark.implicits._
@@ -23,30 +19,19 @@ class InferJaccardSizeFilterSpec extends AnyFunSuite {
   }
 
   test("rule infers size bounds next to a jaccard threshold") {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ InferJaccardSizeFilter
-    try {
-      // parquet-backed pairs (a LocalRelation would be constant-folded
-      // before the Filter survives into the optimized plan)
-      val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select(col("doc_id"), array_sort(array_distinct(split(col("text"), " "))).as("ts"))
-      val pairs = docs.alias("a").join(docs.alias("b"), col("a.doc_id") < col("b.doc_id"))
-        .filter(SortedArrayJaccard(col("a.ts"), col("b.ts")) >= 0.9)
-      val optimized = pairs.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("size("), s"no inferred size predicate in:\n$optimized")
-      // results are unchanged by the implied predicates: compare counts
-      // against the same query without the rule
-      val n = pairs.count()
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == InferJaccardSizeFilter)
-      val nPlain = docs.alias("a").join(docs.alias("b"), col("a.doc_id") < col("b.doc_id"))
-        .filter(SortedArrayJaccard(col("a.ts"), col("b.ts")) >= 0.9)
-        .count()
-      assert(n == nPlain, s"rule changed results: $n vs $nPlain")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == InferJaccardSizeFilter)
-    }
+    // parquet-backed pairs (a LocalRelation would be constant-folded
+    // before the Filter survives into the optimized plan)
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"), array_sort(array_distinct(split(col("text"), " "))).as("ts"))
+    def pairs = docs.alias("a").join(docs.alias("b"), col("a.doc_id") < col("b.doc_id"))
+      .filter(SortedArrayJaccard(col("a.ts"), col("b.ts")) >= 0.9)
+    val optimized = pairs.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("size("), s"no inferred size predicate in:\n$optimized")
+    // results are unchanged by the implied predicates: compare counts
+    // against the same query without the rule
+    val n = pairs.count()
+    val nPlain = graft.TestSession.withoutRules(spark, InferJaccardSizeFilter)(pairs.count())
+    assert(n == nPlain, s"rule changed results: $n vs $nPlain")
   }
 
   test("rule is idempotent and inactive without a jaccard predicate") {

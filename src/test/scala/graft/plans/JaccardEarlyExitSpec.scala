@@ -59,7 +59,7 @@ class JaccardEarlyExitSpec extends AnyFunSuite {
   }
 
   test("rewrite rule swaps predicate sites and leaves value-emitting sites alone") {
-    // the shared session registers InferJaccardSizeFilter before
+    // the shared session holds InferJaccardSizeFilter before
     // RewriteJaccardThresholdPredicate, as every Bench/Verify session does
     val docs = spark.read.parquet(s"${graft.TestSession.fixture("0.001")}/documents.parquet")
       .select(col("doc_id"), array_sort(array_distinct(split(col("text"), " "))).as("ts"))
@@ -81,13 +81,10 @@ class JaccardEarlyExitSpec extends AnyFunSuite {
     // end-to-end: rewritten query ≡ the same query with both rules
     // excluded for its planning only
     val n = pred.count()
-    val excluded = "spark.sql.optimizer.excludedRules"
-    val prev = spark.conf.getOption(excluded)
-    spark.conf.set(excluded, Seq(InferJaccardSizeFilter, RewriteJaccardThresholdPredicate)
-      .map(_.ruleName).mkString(","))
-    val (nPlain, plainPlan) =
-      try { val q = pred; (q.count(), q.queryExecution.optimizedPlan.toString) }
-      finally prev.fold(spark.conf.unset(excluded))(spark.conf.set(excluded, _))
+    val (nPlain, plainPlan) = graft.TestSession.withoutRules(spark,
+        InferJaccardSizeFilter, RewriteJaccardThresholdPredicate) {
+      val q = pred; (q.count(), q.queryExecution.optimizedPlan.toString)
+    }
     assert(!plainPlan.contains("sorted_array_jaccard_at_least"),
       s"excluded rewrite still applied:\n$plainPlan")
     assert(n == nPlain, s"rewrite changed results: $n vs $nPlain")

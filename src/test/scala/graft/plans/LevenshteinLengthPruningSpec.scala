@@ -6,35 +6,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class LevenshteinLengthPruningSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("rule infers a length-gap bound next to a levenshtein threshold") {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ LevenshteinLengthPruning
-    try {
-      // parquet-backed (a LocalRelation would constant-fold away)
-      val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      val pairs = docs.alias("a").join(docs.alias("b"), col("a.doc_id") < col("b.doc_id"))
-        .filter(levenshtein(col("a.text"), col("b.text")) <= 4)
-      val optimized = pairs.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("abs(") && optimized.contains("length("),
-        s"no inferred length-gap predicate in:\n$optimized")
-      val n = pairs.count()
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == LevenshteinLengthPruning)
-      val nPlain = docs.alias("a").join(docs.alias("b"), col("a.doc_id") < col("b.doc_id"))
-        .filter(levenshtein(col("a.text"), col("b.text")) <= 4)
-        .count()
-      assert(n == nPlain, s"rule changed results: $n vs $nPlain")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == LevenshteinLengthPruning)
-    }
+    // parquet-backed (a LocalRelation would constant-fold away)
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    def pairs = docs.alias("a").join(docs.alias("b"), col("a.doc_id") < col("b.doc_id"))
+      .filter(levenshtein(col("a.text"), col("b.text")) <= 4)
+    val optimized = pairs.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("abs(") && optimized.contains("length("),
+      s"no inferred length-gap predicate in:\n$optimized")
+    val n = pairs.count()
+    val nPlain = graft.TestSession.withoutRules(spark, LevenshteinLengthPruning)(pairs.count())
+    assert(n == nPlain, s"rule changed results: $n vs $nPlain")
   }
 
   test("strict and reversed spellings are covered; null rows filter identically") {
@@ -50,14 +35,10 @@ class LevenshteinLengthPruningSpec extends AnyFunSuite {
     assert(LevenshteinLengthPruning(analyzedRev).toString.contains("abs("),
       "reversed form not rewritten")
     // evaluated equivalence on a frame with a null side
-    val withRule = {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ LevenshteinLengthPruning
-      try df.filter(expr("levenshtein(a, b) <= 2")).collect().toSeq
-      finally spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == LevenshteinLengthPruning)
+    val withRule = df.filter(expr("levenshtein(a, b) <= 2")).collect().toSeq
+    val plain = graft.TestSession.withoutRules(spark, LevenshteinLengthPruning) {
+      df.filter(expr("levenshtein(a, b) <= 2")).collect().toSeq
     }
-    val plain = df.filter(expr("levenshtein(a, b) <= 2")).collect().toSeq
     assert(withRule == plain)
   }
 

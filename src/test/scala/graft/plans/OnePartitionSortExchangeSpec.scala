@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * while its frame is built (`Tables.parquet`), and no RangePartitioner
   * sample job when its sort's input is one partition
   * ([[OnePartitionSortExchange]]). Runs on the shared session, which
-  * gets the rules through `GraftExtensions.register`.
+  * gets the rules injected when it is built.
   */
 class OnePartitionSortExchangeSpec extends AnyFunSuite {
 

@@ -12,21 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ConcurrentWritersSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftExtensions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private val dir = "/root/testdata/sf0.001"
 
   test("two racing writers lose at least one slot and merge to the serial result") {
-    spark.sparkContext.setLogLevel("WARN")
     val (merged, lostSlots) =
       graft.operators.StreamReplay.concurrentTxlogWriters(spark, dir, nChunks = 4)
     assert(lostSlots >= 1, "no commit-slot contention was observed")

@@ -23,12 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class EraGuardSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   /** Writes `$dir/events.parquet` whose ts column lands in `year`. */
   private def writeEvents(dir: String, year: Int): Unit = {

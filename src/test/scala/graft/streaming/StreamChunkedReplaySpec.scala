@@ -16,12 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StreamChunkedReplaySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.mkString("|")).toSet

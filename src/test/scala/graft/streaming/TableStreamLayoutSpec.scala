@@ -17,12 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TableStreamLayoutSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def streamedCount(dir: String): Long = {
     val schema = spark.read.parquet(s"$dir/docs.parquet").schema
