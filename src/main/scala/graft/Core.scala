@@ -132,53 +132,28 @@ object Tables {
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame =
     normalizeTs(eventsRawFrame(spark, dir))
 
+  private val eventsShred = Artifact[String]("events_shred")
+
   /** `events` with `props` pre-parsed into a VARIANT column `propsv`,
-    * materialized once per data dir — the ingest-time shredding step a
-    * 100 TB deployment runs once, not per query. Spark 4 writes the
-    * variant column shredded (`spark.sql.variant.writeShredding` /
+    * an [[Artifact]] — the ingest-time shredding step a 100 TB
+    * deployment runs once, not per query. Spark 4 writes the variant
+    * column shredded (`spark.sql.variant.writeShredding` /
     * `inferShreddingSchema`, both default-on) and
     * `pushVariantIntoScan` turns a typed-path `variant_get` into a
     * plain scan of the shredded subcolumn, so queries over `propsv`
-    * never re-parse the JSON string. The derived parquet lives under
-    * java.io.tmpdir keyed by the (read-only) source dir; a temp-dir +
-    * atomic-rename build means a killed half-write is never read back.
+    * never re-parse the JSON string.
     */
   def eventsVariant(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, parse_json}
-    // key by dir AND a source fingerprint (size+mtime of every part):
-    // the driver regenerates /root/testdata between rounds, and a
-    // path-only key would silently serve the PREVIOUS generation's
-    // shred — the cache-flavored twin of the round-6 reader bug
-    val dirKey = d.replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = s"$dirKey-${sourceFingerprint(new java.io.File(s"$d/events.parquet"))}"
-    val shredRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft-shred")
-    val base = new java.io.File(shredRoot, key)
-    val dest = new java.io.File(base, "events_variant.parquet")
-    if (!dest.exists()) {
-      // the fingerprint changed ⇒ the fixture was regenerated; the
-      // previous generation's shreds for this dir are dead weight and
-      // would otherwise accumulate one per regeneration forever
-      Option(shredRoot.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith(s"$dirKey-") && f.getName != key)
-        .foreach { stale =>
-          import java.nio.file.{Files, Path}
-          import scala.jdk.CollectionConverters._
-          val paths = Files.walk(stale.toPath).iterator().asScala.toSeq
-          paths.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_: Path))
-        }
-      base.mkdirs()
-      val tmp = new java.io.File(base, s".build-${java.util.UUID.randomUUID()}")
+    val path = eventsShred.memo(d, "events") {
+      val out = graft.operators.StreamReplay.tempReplayDir("shred")
+        .resolve("events_variant").toString
       events(s, d)
         .select(col("event_id"), parse_json(col("props")).as("propsv"))
-        .write.mode("overwrite").parquet(tmp.toString)
-      if (!tmp.renameTo(dest)) { // lost a build race; drop our copy
-        import java.nio.file.{Files, Path}
-        import scala.jdk.CollectionConverters._
-        val paths = Files.walk(tmp.toPath).iterator().asScala.toSeq
-        paths.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_: Path))
-      }
+        .write.mode("overwrite").parquet(out)
+      out
     }
-    parquet(s, dest.toString)
+    parquet(s, path)
   }
 
   /** Stable digest of a parquet file-or-directory's (name, size,
@@ -284,23 +259,8 @@ object Tables {
         "the scoped shuffle-partition override would leak into their " +
         "micro-batch planning. Run iterative bodies only with no " +
         "concurrent streams on this session.")
-    val partsKey = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevParts = s.conf.getOption(partsKey)
-    val prevAqe = s.conf.getOption(aqeKey)
-    s.conf.set(partsKey, parts.toString)
-    if (parts == 1) s.conf.set(aqeKey, "false")
-    try body
-    finally {
-      prevParts match {
-        case Some(v) => s.conf.set(partsKey, v)
-        case None => s.conf.unset(partsKey)
-      }
-      prevAqe match {
-        case Some(v) => s.conf.set(aqeKey, v)
-        case None => s.conf.unset(aqeKey)
-      }
-    }
+    val aqeOff = if (parts == 1) Seq("spark.sql.adaptive.enabled" -> "false") else Nil
+    Runeset.withConf(s, ("spark.sql.shuffle.partitions" -> parts.toString) +: aqeOff: _*)(body)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = read(s, d, "region")

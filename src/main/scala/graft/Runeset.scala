@@ -57,6 +57,21 @@ object Runeset {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
   }
 
+  /** Runs `body` with each of `settings` set on the session, then puts
+    * every key back as it was (its previous value, or unset), also when
+    * the body throws. Session conf is global, so every scoped override
+    * goes through here and none leaks into the next query.
+    */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Parse `key = value` lines; `spell.<name>.<key> = v` nests into
     * that spell's config table. '#' starts a comment.
     */

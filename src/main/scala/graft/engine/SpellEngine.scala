@@ -91,16 +91,22 @@ object SpellEngine {
   def castAll(events: Dataset[DynEvent], spell: Spell,
       maxHops: Int = RunawayLoopBound): Dataset[DynEvent] = {
     implicit val enc: Encoder[DynEvent] = Encoders.kryo[DynEvent]
+    inPartitions(events, spell)(_.flatMap(e => castLoop(spell, e, maxHops)))
+  }
+
+  /** The L1 lifecycle around one partition's casts: prepare before the
+    * first row, unprepare at task completion — which fires on normal
+    * exhaustion, on mid-partition failure, AND when the consumer stops
+    * early (limit/take), unlike an exhaustion-triggered iterator hook.
+    */
+  private def inPartitions[I, O: Encoder](events: Dataset[I], spell: Spell)(
+      cast: Iterator[I] => Iterator[O]): Dataset[O] =
     events.mapPartitions { rows =>
       spell.prepare()
-      // unprepare at task completion — fires on normal exhaustion,
-      // on mid-partition failure, AND when the consumer stops early
-      // (limit/take), unlike an exhaustion-triggered iterator hook
       Option(org.apache.spark.TaskContext.get())
         .foreach(_.addTaskCompletionListener[Unit](_ => spell.unprepare()))
-      rows.flatMap(e => castLoop(spell, e, maxHops))
+      cast(rows)
     }
-  }
 
   /** Columnar variant of [[castAll]] for fixed-schema pipelines: the
     * input and output stay typed Products (Tungsten rows — codegen'd,
@@ -115,10 +121,7 @@ object SpellEngine {
   def castAllColumnar[I, O: Encoder](events: Dataset[I], spell: Spell,
       toEvent: I => DynEvent, fromHop: DynEvent => O,
       maxHops: Int = RunawayLoopBound): Dataset[O] =
-    events.mapPartitions { rows =>
-      spell.prepare()
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => spell.unprepare()))
+    inPartitions(events, spell) { rows =>
       rows.flatMap(r => castLoop(spell, toEvent(r), maxHops).map(fromHop))
     }
 
@@ -148,22 +151,17 @@ object SpellEngine {
   def castAllMetered(events: Dataset[DynEvent], spell: Spell, metrics: SpellMetrics,
       maxHops: Int = RunawayLoopBound): Dataset[DynEvent] = {
     implicit val enc: Encoder[DynEvent] = Encoders.kryo[DynEvent]
-    events.mapPartitions { rows =>
-      spell.prepare()
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => spell.unprepare()))
-      rows.flatMap { e =>
-        if (!matchesTopic(spell.topic, e)) Vector.empty
-        else {
-          metrics.eventsIn.add(1)
-          val t0 = System.nanoTime()
-          val hopsOut = castLoop(spell, e, maxHops)
-          metrics.castNanos.add(System.nanoTime() - t0)
-          metrics.eventsOut.add(hopsOut.size)
-          hopsOut
-        }
+    inPartitions(events, spell)(_.flatMap { e =>
+      if (!matchesTopic(spell.topic, e)) Vector.empty
+      else {
+        metrics.eventsIn.add(1)
+        val t0 = System.nanoTime()
+        val hopsOut = castLoop(spell, e, maxHops)
+        metrics.castNanos.add(System.nanoTime() - t0)
+        metrics.eventsOut.add(hopsOut.size)
+        hopsOut
       }
-    }
+    })
   }
 
   /** Multi-spell topic routing (the reference's roadmap capability,

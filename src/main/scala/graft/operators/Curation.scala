@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Artifact, Q, Tables}
 import graft.functions.TextVec._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -207,40 +207,24 @@ object Curation {
     * keeper → near-dup component keeper. `probeName` labels the
     * runtime convergence probe's failure message.
     *
-    * MEMOIZED AS A PROCESS-LEVEL PARQUET ARTIFACT (round-14 verdict
-    * item 5): five family queries (c02/c04/c05/c06/c07) consume this
-    * exact frame, and each used to rebuild the whole
-    * signature→band→label-propagation kernel from scratch — in a real
-    * pipeline the kept manifest is computed ONCE per corpus snapshot
-    * and every downstream stage reads the artifact, which is
-    * precisely what this memo reproduces. Keyed by (dir, source
-    * fingerprint) like the events era check, so a regenerated fixture
-    * rebuilds; the artifact is immutable parquet, immune to Bench's
-    * between-query unpersist sweep (an in-memory localCheckpoint memo
-    * would be destroyed by it and fail on reuse). The kernel's
-    * one-time build cost is accumulated in [[keptKernelBuildSec]] and
-    * Bench reports it in the JSON next to the per-query timings, so
-    * the amortized term stays visible in the record rather than
-    * vanishing under min-of-2. Determinism makes the memo
-    * correctness-free: min-id keepers + converged component minima
-    * are unique, and the hash gate re-proves every consumer against
-    * its oracle on every Verify run.
+    * The manifest is a [[graft.Artifact]] (round-14 verdict item 5):
+    * five family queries (c02/c04/c05/c06/c07) consume this exact
+    * frame, and each used to rebuild the whole
+    * signature→band→label-propagation kernel from scratch — a real
+    * pipeline computes the kept manifest ONCE per corpus snapshot and
+    * every downstream stage reads it. Min-id keepers and converged
+    * component minima are unique, so the manifest is deterministic.
     */
-  private[graft] val keptKernelBuildSec =
-    new java.util.concurrent.atomic.AtomicLong(0) // nanos, summed
-  private val keptArtifact =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val keptManifest = Artifact[String]("neardup_kept")
+  private[graft] val keptKernelBuildSec = keptManifest.buildNanos
   private def nearDupKept(s: SparkSession, d: String,
       probeName: String): DataFrame = {
-    val key = s"$d:${Tables.sourceFingerprint(new java.io.File(s"$d/documents.parquet"))}"
-    val path = keptArtifact.computeIfAbsent(key, _ => {
-      val t0 = System.nanoTime()
+    val path = keptManifest.memo(d, "documents") {
       val out = StreamReplay.tempReplayDir("c02kept").resolve("kept").toString
       nearDupKeptFrom(exactKeepers(qualityDocs(s, d)), probeName)
         .write.mode("overwrite").parquet(out)
-      keptKernelBuildSec.addAndGet(System.nanoTime() - t0): Unit
       out
-    })
+    }
     s.read.schema("doc_id BIGINT, lang STRING, quality DOUBLE").parquet(path)
   }
 
@@ -378,20 +362,6 @@ object Curation {
       .orderBy(col("doc_id"))
   }
 
-  /** c02 + the DECONTAMINATION stage: after the near-dup component
-    * keeper, drop (a) the benchmark docs themselves (p01's
-    * deterministic 5% md5 sample, standing in for the held-out eval
-    * set — eval data never trains) and (b) any kept doc sharing a
-    * verbatim 8-gram with a benchmark doc (t10's overlap test).
-    * Quality-filter → exact-dedup → near-dup collapse → decontam →
-    * split: the full pre-training curation order.
-    *
-    * Scale shape: adds to c02 only per-row gram projections and one
-    * BROADCAST join against the (small-by-definition) benchmark gram
-    * set — the corpus stream never shuffles for the contamination
-    * test, and the keeper set anti-joins a contaminated-id set that
-    * is at most benchmark-sized per gram bucket.
-    */
   /** DuckDB CTEs appended after [[sqlNearDupKeptCtes]] for the
     * decontamination stage, ending in `clean(doc_id, lang, quality)`
     * — the kept set minus the benchmark sample and every doc sharing
@@ -457,6 +427,20 @@ object Curation {
       .join(contaminated, Seq("doc_id"), "left_anti")
   }
 
+  /** c02 + the DECONTAMINATION stage: after the near-dup component
+    * keeper, drop (a) the benchmark docs themselves (p01's
+    * deterministic 5% md5 sample, standing in for the held-out eval
+    * set — eval data never trains) and (b) any kept doc sharing a
+    * verbatim 8-gram with a benchmark doc (t10's overlap test).
+    * Quality-filter → exact-dedup → near-dup collapse → decontam →
+    * split: the full pre-training curation order.
+    *
+    * Scale shape: adds to c02 only per-row gram projections and one
+    * BROADCAST join against the (small-by-definition) benchmark gram
+    * set — the corpus stream never shuffles for the contamination
+    * test, and the keeper set anti-joins a contaminated-id set that
+    * is at most benchmark-sized per gram bucket.
+    */
   val c04CurateDecontam = Q(
     "c04_curate_decontam",
     s"""WITH $sqlNearDupKeptCtes,
@@ -470,20 +454,6 @@ object Curation {
       .orderBy(col("doc_id"))
   }
 
-  /** The COMPLETE pre-training pipeline: c04 + the domain-mixture
-    * rebalance (p04's integer-exact quota math) between
-    * decontamination and split — quality → exact dedup → near-dup
-    * collapse → decontam → mixture → split, each stage an operator
-    * the inventory verifies in isolation. Emits the final per-doc
-    * training manifest (doc_id, lang, source, split, quality).
-    *
-    * Scale shape: adds to c04 one tiny per-source agg, a
-    * rank-within-source window over the (already heavily reduced)
-    * clean set, and a broadcast of the ≤|sources|-row quota table.
-    * Mixture runs AFTER decontam so quotas are filled from admissible
-    * docs only — rebalancing before dropping contaminated docs would
-    * under-fill the affected sources' shares.
-    */
   /** DuckDB CTEs appended after the decontam chain for the mixture
     * stage, ending in `manifest(doc_id, lang, source, split,
     * quality)`. c05 emits it; c06 packs its train split.
@@ -514,6 +484,20 @@ object Curation {
        |  FROM ranked r JOIN quota q ON r.source = q.source AND r.rk <= q.quota
        |)""".stripMargin
 
+  /** The COMPLETE pre-training pipeline: c04 + the domain-mixture
+    * rebalance (p04's integer-exact quota math) between
+    * decontamination and split — quality → exact dedup → near-dup
+    * collapse → decontam → mixture → split, each stage an operator
+    * the inventory verifies in isolation. Emits the final per-doc
+    * training manifest (doc_id, lang, source, split, quality).
+    *
+    * Scale shape: adds to c04 one tiny per-source agg, a
+    * rank-within-source window over the (already heavily reduced)
+    * clean set, and a broadcast of the ≤|sources|-row quota table.
+    * Mixture runs AFTER decontam so quotas are filled from admissible
+    * docs only — rebalancing before dropping contaminated docs would
+    * under-fill the affected sources' shares.
+    */
   val c05CurateMixture = Q(
     "c05_curate_mixture",
     s"""WITH $sqlNearDupKeptCtes,
@@ -2232,14 +2216,6 @@ object Curation {
       .orderBy(col("bucket"))
   }
 
-  /** Builds the c25/c26 log-structured table: 16 hive bucket files +
-    * the bucket-3 rewrite file, and the four-commit JSON-lines action
-    * log (v0 add 0-7, v1 add 8-15, v2 remove 3+7, v3 add the
-    * rewrite). Returns the files root, the VALIDATED (commit, action,
-    * path) list (gapless filenames `require`d), and the commit count.
-    * The one driver-side read here is the metadata-sized action log —
-    * the same read every Delta client performs.
-    */
   /** OPTIMISTIC CONCURRENCY over the transaction log (c30 — the ACID
     * multi-writer pillar next to c25 time travel, c26 incremental,
     * c27 COW, c28 MOR, c29 schema evolution; Delta's
@@ -2746,7 +2722,7 @@ object Curation {
       |FROM chg GROUP BY version, change_type
       |ORDER BY version, change_type""".stripMargin
   ) { (s, d) =>
-    val (files, perVersion) = txlogTableWithChanges(s, d, "c33")
+    val (files, perVersion) = txlogTableWithChanges(s, d)
     val feeds = perVersion.zipWithIndex.map { case (tx, v) =>
       txlogChangeRows(s, files, tx).withColumn("version", lit(v.toLong))
     }
@@ -2946,33 +2922,21 @@ object Curation {
     * incremental view maintenance both read. Returns the files root
     * and the per-version transaction list.
     *
-    * MEMOIZED like [[nearDupKept]]'s manifest (one fixture build per
-    * (dir, source fingerprint) per process — c33, q96, and their
-    * probes all read the same immutable six-version table, exactly
-    * as both would read ONE production table; build cost accumulates
-    * in [[txlogChangesBuildSec]] and Bench reports it next to the
-    * per-query mins). Reuse is read-only: the commit mtime stagger
-    * q96's file source needs happens once, inside the build.
+    * The table is a [[graft.Artifact]]: c33, q96 and their specs all
+    * read the same immutable six-version table, exactly as both would
+    * read ONE production table. Reuse is read-only: the commit mtime
+    * stagger q96's file source needs happens once, inside the build.
     */
-  private[graft] val txlogChangesBuildSec =
-    new java.util.concurrent.atomic.AtomicLong(0) // nanos, summed
-  private val txlogChangesArtifact = new java.util.concurrent
-    .ConcurrentHashMap[String, (String, IndexedSeq[TxActions])]()
-  private[graft] def txlogTableWithChanges(s: SparkSession, d: String,
-      name: String): (String, IndexedSeq[TxActions]) = {
-    val key = s"$d:${Tables.sourceFingerprint(new java.io.File(s"$d/documents.parquet"))}"
-    txlogChangesArtifact.computeIfAbsent(key, _ => {
-      val t0 = System.nanoTime()
-      val built = txlogTableWithChangesBuild(s, d, name)
-      txlogChangesBuildSec.addAndGet(System.nanoTime() - t0): Unit
-      built
-    })
-  }
+  private val txlogChanges = Artifact[(String, IndexedSeq[TxActions])]("txlog_changes")
+  private[graft] val txlogChangesBuildSec = txlogChanges.buildNanos
+  private[graft] def txlogTableWithChanges(s: SparkSession,
+      d: String): (String, IndexedSeq[TxActions]) =
+    txlogChanges.memo(d, "documents")(txlogTableWithChangesBuild(s, d))
 
-  private def txlogTableWithChangesBuild(s: SparkSession, d: String,
-      name: String): (String, IndexedSeq[TxActions]) = {
+  private def txlogTableWithChangesBuild(s: SparkSession,
+      d: String): (String, IndexedSeq[TxActions]) = {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    val (files, actions0, nCommits0) = txlogTable(s, d, name)
+    val (files, actions0, nCommits0) = txlogTable(s, d, "txlog_changes")
     val live = scala.collection.mutable.LinkedHashSet.empty[String]
     (0 until nCommits0).foreach { v =>
       actions0.filter(_._1 == v).foreach {
@@ -3139,6 +3103,14 @@ object Curation {
     attempt
   }
 
+  /** Builds the c25/c26 log-structured table: 16 hive bucket files +
+    * the bucket-3 rewrite file, and the four-commit JSON-lines action
+    * log (v0 add 0-7, v1 add 8-15, v2 remove 3+7, v3 add the
+    * rewrite). Returns the files root, the VALIDATED (commit, action,
+    * path) list (gapless filenames `require`d), and the commit count.
+    * The one driver-side read here is the metadata-sized action log —
+    * the same read every Delta client performs.
+    */
   private def txlogTable(s: SparkSession, d: String,
       name: String): (String, Array[(Int, String, String)], Int) = {
     val base = StreamReplay.tempReplayDir(name)

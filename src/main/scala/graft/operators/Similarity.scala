@@ -117,19 +117,6 @@ object Similarity {
       .orderBy(col("query_id"), col("k"))
   }
 
-  /** IVF-style ANN: 8 seeded corpus-independent ±1 corner centroids
-    * ([[graft.functions.TextVec.seededPlane]] with a distinct seed
-    * offset — each cell is "which signed-sum corner aligns best");
-    * every vector is assigned to its nearest centroid by dot product
-    * (argmax over a fixed list — deterministic tie-break by index);
-    * queries probe only their own cell, then exact cosine top-3.
-    * At scale: cells partition the corpus, assignment is a pure
-    * projection (constant centroids), and a query touches 1/n_cells
-    * of the data; TRAINED centroids (s04's k-means) and multi-probe
-    * (s06) are the production knobs — the plumbing here is the real
-    * shape, with no corpus-prefix dependence (round 2 used
-    * embeddings 0..7 as centroids).
-    */
   /** Seed offset separating IVF centroids from the s02/d06 LSH
     * planes (plane ids 0..3 are taken; centroids use 100..107).
     */
@@ -172,6 +159,19 @@ object Similarity {
        |)""".stripMargin
   }
 
+  /** IVF-style ANN: 8 seeded corpus-independent ±1 corner centroids
+    * ([[graft.functions.TextVec.seededPlane]] with a distinct seed
+    * offset — each cell is "which signed-sum corner aligns best");
+    * every vector is assigned to its nearest centroid by dot product
+    * (argmax over a fixed list — deterministic tie-break by index);
+    * queries probe only their own cell, then exact cosine top-3.
+    * At scale: cells partition the corpus, assignment is a pure
+    * projection (constant centroids), and a query touches 1/n_cells
+    * of the data; TRAINED centroids (s04's k-means) and multi-probe
+    * (s06) are the production knobs — the plumbing here is the real
+    * shape, with no corpus-prefix dependence (round 2 used
+    * embeddings 0..7 as centroids).
+    */
   val s03AnnIvf = Q(
     "s03_ann_ivf",
     { s"""WITH $sqlCtrCells, scored AS (

@@ -36,16 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object SkewProbe {
 
-  private def withConf[A](s: SparkSession, kv: (String, String)*)(body: => A): A = {
-    val prev = kv.map { case (k, _) => k -> s.conf.getOption(k) }
-    kv.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
   /** (mode, result_rows, wall_ms, skew_in_plan) for skew handling
     * on/off over the same hot-key join.
     */
@@ -73,7 +63,7 @@ object SkewProbe {
       .write.mode("overwrite").parquet(dimPath)
 
     def run(skewOn: Boolean): (String, Long, Long, Int) =
-      withConf(s,
+      graft.Runeset.withConf(s,
         "spark.sql.adaptive.enabled" -> "true",
         "spark.sql.adaptive.skewJoin.enabled" -> skewOn.toString,
         // scaled-down thresholds: same code path as the 256 MB

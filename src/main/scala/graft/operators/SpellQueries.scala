@@ -32,6 +32,37 @@ object SpellQueries {
       }
   }
 
+  /** Casts `(event_id, value)` seeds through [[HalvingSpell]] and
+    * returns every hop as `(event_id, hop, value)`; a null id reads
+    * back as -1 and a null value as NaN. Each seed enters the engine
+    * as the event `{event_id, value, hop: 0}`.
+    *
+    * Columnar edges (SpellEngine.castAllColumnar): the seed rows
+    * enter and the hop rows leave as typed Products — Tungsten rows,
+    * whole-stage codegen, column pruning at the scan — while the
+    * DynEvent + per-hop codec barrier lives only inside the
+    * partition. Round 1 ran this through three kryo boundaries and
+    * paid 32 s at sf0.1 for it.
+    */
+  def castEvents(seeds: org.apache.spark.sql.Dataset[(java.lang.Long, java.lang.Double)])
+      : org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
+    val s = seeds.sparkSession
+    import s.implicits._
+    SpellEngine.castAllColumnar[(java.lang.Long, java.lang.Double), (Long, Long, Double)](
+      seeds, HalvingSpell,
+      toEvent = { case (id, v) =>
+        DynEvent(Map[EValue, EValue](
+          EStr("event_id") -> (if (id == null) ENil else EInt(id)),
+          EStr("value") -> (if (v == null) ENil else EFloat(v)),
+          EStr("hop") -> EInt(0)))
+      },
+      fromHop = { e =>
+        (e.get("event_id") match { case Some(EInt(i)) => i; case _ => -1L },
+          e.get("hop") match { case Some(EInt(h)) => h; case _ => -1L },
+          e.get("value") match { case Some(EFloat(v)) => v; case _ => Double.NaN })
+      })
+  }
+
   /** Every hop of every event's feedback loop, as rows. The DuckDB
     * oracle replays the same loop with a recursive CTE.
     */
@@ -47,29 +78,10 @@ object SpellQueries {
       |WHERE hop >= 1
       |ORDER BY event_id, hop""".stripMargin
   ) { (s, d) =>
-    // Columnar edges (SpellEngine.castAllColumnar): the seed rows
-    // enter and the hop rows leave as typed Products — Tungsten rows,
-    // whole-stage codegen, column pruning at the scan — while the
-    // DynEvent + per-hop codec barrier lives only inside the
-    // partition. Round 1 ran this through three kryo boundaries and
-    // paid 32 s at sf0.1 for it.
     import s.implicits._
-    val seeds = Tables.events(s, d)
-      .select(col("event_id"), col("value"))
-      .as[(java.lang.Long, java.lang.Double)]
-    SpellEngine.castAllColumnar[(java.lang.Long, java.lang.Double), (Long, Long, Double)](
-      seeds, HalvingSpell,
-      toEvent = { case (id, v) =>
-        DynEvent(Map[EValue, EValue](
-          EStr("event_id") -> (if (id == null) ENil else EInt(id)),
-          EStr("value") -> (if (v == null) ENil else EFloat(v)),
-          EStr("hop") -> EInt(0)))
-      },
-      fromHop = { e =>
-        (e.get("event_id") match { case Some(EInt(i)) => i; case _ => -1L },
-          e.get("hop") match { case Some(EInt(h)) => h; case _ => -1L },
-          e.get("value") match { case Some(EFloat(v)) => v; case _ => Double.NaN })
-      })
+    castEvents(Tables.events(s, d)
+        .select(col("event_id"), col("value"))
+        .as[(java.lang.Long, java.lang.Double)])
       .toDF("event_id", "hop", "value")
       .orderBy(col("event_id"), col("hop"))
   }

@@ -644,38 +644,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** CCNet-style language-model quality filtering (Wenzek et al.,
-    * LREC'20): train a bigram LM on a reference slice of the corpus
-    * (docs with even doc_id — the stand-in for "Wikipedia" in the
-    * CCNet recipe), score EVERY document's cross-entropy under it,
-    * and keep the low-perplexity tail. The perplexity surrogate is
-    * integer-exact by construction — the house rule for oracle
-    * parity (t07's rationale: `ln` is a libm call whose low bits
-    * differ between the JVM and DuckDB): each bigram occurrence
-    * costs `flog2(cu(w1) + V) − flog2(cb(w1,w2) + 1)` whole bits,
-    * where `flog2(n) = length(bin(n)) − 1` is the integer floor-log2
-    * both engines compute exactly, `cb`/`cu` are the reference
-    * bigram/context occurrence counts (add-one smoothing; an unseen
-    * bigram under a seen context costs the full `flog2(cu + V)`, an
-    * unseen context costs `flog2(V)` — the uniform-over-vocab
-    * fallback), and V is the reference vocabulary size. `total_bits
-    * / n_bigrams` is then bits-per-token — floor-log2-quantized
-    * cross-entropy, within 1 bit/token of the real thing and
-    * monotone in the same model evidence; the keep threshold
-    * (4.5 bits/token, ~the corpus median under this model) is compared in integer cross-multiplied form.
-    *
-    * Scale shape (the CCNet deployment shape): the model is two
-    * count tables bounded by the REFERENCE corpus (Wikipedia-sized,
-    * not crawl-sized) — here they flow through shuffled equi-joins
-    * keyed on the gram/context string, the shape that holds even if
-    * the model outgrows broadcast; a production run would prune and
-    * broadcast them. Bigram occurrences come from the
-    * [[graft.functions.WordGramsMulti]] codegen kernel (multiset —
-    * deduping would under-count exactly the repetitive docs a
-    * perplexity filter exists to catch), so the token array
-    * materializes once per row. One explode, two equi-joins, one
-    * doc-keyed aggregate, no global state: linear in corpus size.
-    */
   /** The t15 LM-scoring CTE chain (reference model from even-id
     * docs, add-1/vocab-smoothed flog2 bits per bigram, per-doc
     * totals), ending in `agg(doc_id, n_bigrams, total_bits)` —
@@ -745,6 +713,38 @@ object TextAnalysis {
         coalesce(col("total_bits"), lit(0L)).as("total_bits"))
   }
 
+  /** CCNet-style language-model quality filtering (Wenzek et al.,
+    * LREC'20): train a bigram LM on a reference slice of the corpus
+    * (docs with even doc_id — the stand-in for "Wikipedia" in the
+    * CCNet recipe), score EVERY document's cross-entropy under it,
+    * and keep the low-perplexity tail. The perplexity surrogate is
+    * integer-exact by construction — the house rule for oracle
+    * parity (t07's rationale: `ln` is a libm call whose low bits
+    * differ between the JVM and DuckDB): each bigram occurrence
+    * costs `flog2(cu(w1) + V) − flog2(cb(w1,w2) + 1)` whole bits,
+    * where `flog2(n) = length(bin(n)) − 1` is the integer floor-log2
+    * both engines compute exactly, `cb`/`cu` are the reference
+    * bigram/context occurrence counts (add-one smoothing; an unseen
+    * bigram under a seen context costs the full `flog2(cu + V)`, an
+    * unseen context costs `flog2(V)` — the uniform-over-vocab
+    * fallback), and V is the reference vocabulary size. `total_bits
+    * / n_bigrams` is then bits-per-token — floor-log2-quantized
+    * cross-entropy, within 1 bit/token of the real thing and
+    * monotone in the same model evidence; the keep threshold
+    * (4.5 bits/token, ~the corpus median under this model) is compared in integer cross-multiplied form.
+    *
+    * Scale shape (the CCNet deployment shape): the model is two
+    * count tables bounded by the REFERENCE corpus (Wikipedia-sized,
+    * not crawl-sized) — here they flow through shuffled equi-joins
+    * keyed on the gram/context string, the shape that holds even if
+    * the model outgrows broadcast; a production run would prune and
+    * broadcast them. Bigram occurrences come from the
+    * [[graft.functions.WordGramsMulti]] codegen kernel (multiset —
+    * deduping would under-count exactly the repetitive docs a
+    * perplexity filter exists to catch), so the token array
+    * materializes once per row. One explode, two equi-joins, one
+    * doc-keyed aggregate, no global state: linear in corpus size.
+    */
   val t15NgramPerplexity = Q(
     "t15_ngram_perplexity",
     s"""WITH $sqlPplAggCtes
@@ -770,33 +770,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** REAL BPE tokenizer TRAINING (Sennrich et al., ACL'16 — the
-    * algorithm behind GPT/Llama vocabularies), completing the story
-    * t05 stubs with a regex: learn the first 10 merges from the
-    * corpus word-type table. Each round counts adjacent symbol
-    * pairs WEIGHTED by word frequency (the WordGramsMulti multiset
-    * kernel over the space-joined symbol string), picks the argmax
-    * pair under the deterministic (count DESC, pair ASC) tie-break,
-    * and applies the merge as a delimiter-guarded string replace —
-    * `replace(' '||sym||' ', ' a b ' → ' ab ')` IS canonical BPE
-    * merge application: both engines' replace scans left-to-right
-    * without rescanning its own output, which is exactly BPE's
-    * leftmost-first non-overlapping rule (verified: 'a a a' under
-    * merge 'a a' → 'aa a' in both). A round with no remaining pairs
-    * emits no merge and later rounds no-op (LEFT JOIN ON TRUE, not
-    * a CROSS JOIN that would annihilate the word table). Empty-string
-    * word types (consecutive-space artifacts) are excluded up front —
-    * the one input where the engines' char-split disagrees ([''] vs
-    * []) and a symbol-less word is meaningless to BPE anyway.
-    *
-    * Scale shape: the corpus-linear part is ONE groupBy building the
-    * word-type table (vocab-sized — millions of types at 100 TB, not
-    * corpus-sized); all 10 training rounds iterate over that bounded
-    * table with eager localCheckpoint per round (the c13/d07
-    * discipline), each round one pair count + a 1-row argmax
-    * broadcast back onto the types. Output is the learned merge
-    * table — the artifact a tokenizer ships.
-    */
   /** The w0..w10/b1..b10 CTE chain of the BPE trainer — shared by
     * the t16 (merge table) and t17 (encoder) oracles.
     */
@@ -831,6 +804,33 @@ object TextAnalysis {
     base + "\n" + iters
   }
 
+  /** REAL BPE tokenizer TRAINING (Sennrich et al., ACL'16 — the
+    * algorithm behind GPT/Llama vocabularies), completing the story
+    * t05 stubs with a regex: learn the first 10 merges from the
+    * corpus word-type table. Each round counts adjacent symbol
+    * pairs WEIGHTED by word frequency (the WordGramsMulti multiset
+    * kernel over the space-joined symbol string), picks the argmax
+    * pair under the deterministic (count DESC, pair ASC) tie-break,
+    * and applies the merge as a delimiter-guarded string replace —
+    * `replace(' '||sym||' ', ' a b ' → ' ab ')` IS canonical BPE
+    * merge application: both engines' replace scans left-to-right
+    * without rescanning its own output, which is exactly BPE's
+    * leftmost-first non-overlapping rule (verified: 'a a a' under
+    * merge 'a a' → 'aa a' in both). A round with no remaining pairs
+    * emits no merge and later rounds no-op (LEFT JOIN ON TRUE, not
+    * a CROSS JOIN that would annihilate the word table). Empty-string
+    * word types (consecutive-space artifacts) are excluded up front —
+    * the one input where the engines' char-split disagrees ([''] vs
+    * []) and a symbol-less word is meaningless to BPE anyway.
+    *
+    * Scale shape: the corpus-linear part is ONE groupBy building the
+    * word-type table (vocab-sized — millions of types at 100 TB, not
+    * corpus-sized); all 10 training rounds iterate over that bounded
+    * table with eager localCheckpoint per round (the c13/d07
+    * discipline), each round one pair count + a 1-row argmax
+    * broadcast back onto the types. Output is the learned merge
+    * table — the artifact a tokenizer ships.
+    */
   val t16BpeMerges = Q(
     "t16_bpe_merges",
     {
@@ -1693,21 +1693,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** GOPHER RULE FILTERING (Rae et al. 2021, arXiv:2112.11446
-    * §A1.1) — the NAMED pre-training quality rule set (t03 scores a
-    * blended quality, t24 buckets by an LM signal; THIS is the
-    * published hard-threshold family nearly every later pipeline —
-    * MassiveText, RefinedWeb, Dolma, FineWeb — starts from): word
-    * count in [50, 100k], mean word length in [3, 10], ≥80% of words
-    * containing an alphabetic character, ≥2 stop words, and a
-    * symbol-to-word ratio ≤ 0.1 ('#' and '…'-as-'...'). Every ratio
-    * threshold is spelled CROSS-MULTIPLIED so the verdicts are pure
-    * integer comparisons — bit-portable across engines with no
-    * float-division edge anywhere; each rule emits its own flag so
-    * downstream can ablate rules, and `keep` is their conjunction.
-    * Pure per-row projection: zero shuffle, fully codegen'd, the
-    * t14 scale shape.
-    */
   /** Gopher metric columns (Rae et al. 2021 §A1.1), shared between
     * t27's per-rule ablation view and c24's pipeline gate — one
     * SELECT body parameterized by the FROM table, so the two
@@ -1766,6 +1751,21 @@ object TextAnalysis {
       col("n_stop") >= 2L &&
       lit(10L) * col("n_sym") <= col("n_words")
 
+  /** GOPHER RULE FILTERING (Rae et al. 2021, arXiv:2112.11446
+    * §A1.1) — the NAMED pre-training quality rule set (t03 scores a
+    * blended quality, t24 buckets by an LM signal; THIS is the
+    * published hard-threshold family nearly every later pipeline —
+    * MassiveText, RefinedWeb, Dolma, FineWeb — starts from): word
+    * count in [50, 100k], mean word length in [3, 10], ≥80% of words
+    * containing an alphabetic character, ≥2 stop words, and a
+    * symbol-to-word ratio ≤ 0.1 ('#' and '…'-as-'...'). Every ratio
+    * threshold is spelled CROSS-MULTIPLIED so the verdicts are pure
+    * integer comparisons — bit-portable across engines with no
+    * float-division edge anywhere; each rule emits its own flag so
+    * downstream can ablate rules, and `keep` is their conjunction.
+    * Pure per-row projection: zero shuffle, fully codegen'd, the
+    * t14 scale shape.
+    */
   val t27GopherRules = Q(
     "t27_gopher_rules",
     { s"""WITH m AS (

@@ -34,16 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object DppProbe {
 
-  private def withConf[A](s: SparkSession, key: String, value: String)(body: => A): A = {
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
   /** (mode, result_rows, files_read, rows_scanned, dpp_in_plan) for
     * mode ∈ {dpp_on, dpp_off} over the same partitioned copy.
     */
@@ -78,25 +68,25 @@ object DppProbe {
       .write.mode("overwrite").parquet(dimPath)
 
     def run(dppOn: Boolean): (String, Long, Long, Long, Int) =
-      withConf(s, "spark.sql.optimizer.dynamicPartitionPruning.enabled", dppOn.toString) {
-        withConf(s, "spark.sql.adaptive.enabled", "false") {
-          val fact = graft.Tables.parquet(s, factPath)
-          val dim = graft.Tables.parquet(s, dimPath)
-          val joined = fact.join(broadcast(dim), Seq("day"))
-            .where(col("label") === "keep")
-            .groupBy(col("day"))
-            .agg(count(lit(1)).as("n"))
-          val resultRows = joined.collect().map(_.getLong(1)).sum
-          val plan = joined.queryExecution.executedPlan
-          val factScans = plan.collectLeaves().collect {
-            case f: org.apache.spark.sql.execution.FileSourceScanExec
-                if f.relation.location.rootPaths.exists(_.toString.contains("events_by_day")) => f
-          }
-          val files = factScans.map(_.metrics("numFiles").value).sum
-          val scanned = factScans.map(_.metrics("numOutputRows").value).sum
-          val hasDpp = if (plan.toString.contains("dynamicpruning")) 1 else 0
-          (if (dppOn) "dpp_on" else "dpp_off", resultRows, files, scanned, hasDpp)
+      graft.Runeset.withConf(s,
+          "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> dppOn.toString,
+          "spark.sql.adaptive.enabled" -> "false") {
+        val fact = graft.Tables.parquet(s, factPath)
+        val dim = graft.Tables.parquet(s, dimPath)
+        val joined = fact.join(broadcast(dim), Seq("day"))
+          .where(col("label") === "keep")
+          .groupBy(col("day"))
+          .agg(count(lit(1)).as("n"))
+        val resultRows = joined.collect().map(_.getLong(1)).sum
+        val plan = joined.queryExecution.executedPlan
+        val factScans = plan.collectLeaves().collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec
+              if f.relation.location.rootPaths.exists(_.toString.contains("events_by_day")) => f
         }
+        val files = factScans.map(_.metrics("numFiles").value).sum
+        val scanned = factScans.map(_.metrics("numOutputRows").value).sum
+        val hasDpp = if (plan.toString.contains("dynamicpruning")) 1 else 0
+        (if (dppOn) "dpp_on" else "dpp_off", resultRows, files, scanned, hasDpp)
       }
 
     Seq(run(dppOn = true), run(dppOn = false))

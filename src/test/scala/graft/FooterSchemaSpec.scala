@@ -23,9 +23,7 @@ class FooterSchemaSpec extends AnyFunSuite {
 
   /** Equal schemas under each nanosAsLong setting, or both reads fail. */
   private def assertSameSchema(paths: String*): Unit = {
-    val prev = spark.conf.getOption(nanosKey)
-    try for (nanos <- Seq("true", "false")) {
-      spark.conf.set(nanosKey, nanos)
+    for (nanos <- Seq("true", "false")) Runeset.withConf(spark, nanosKey -> nanos) {
       (Try(spark.read.parquet(paths: _*).schema), Try(Tables.parquet(spark, paths: _*).schema)) match {
         case (Success(inferred), Success(footer)) =>
           assert(footer == inferred,
@@ -34,7 +32,7 @@ class FooterSchemaSpec extends AnyFunSuite {
         case (inferred, footer) =>
           fail(s"${paths.mkString(",")} nanosAsLong=$nanos: inference $inferred, footer read $footer")
       }
-    } finally prev.fold(spark.conf.unset(nanosKey))(spark.conf.set(nanosKey, _))
+    }
   }
 
   for (sf <- Seq("0.001", "0.01")) {

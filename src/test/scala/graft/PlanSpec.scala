@@ -675,14 +675,10 @@ class PlanSpec extends AnyFunSuite {
     // scan threshold (10 GB — production triggers it naturally), so
     // the test lowers the thresholds to demonstrate and pin the
     // mechanism; conf restored after.
-    val conf = spark.conf
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = keys.map { case (k, _) => k -> conf.getOption(k) }
-    keys.foreach { case (k, v) => conf.set(k, v) }
-    try {
+    Runeset.withConf(spark,
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables.lineitem(spark, dir)
       val ord = Tables.orders(spark, dir)
         .filter(org.apache.spark.sql.functions.col("o_totalprice") > 500000)
@@ -692,9 +688,6 @@ class PlanSpec extends AnyFunSuite {
         s"expected a runtime bloom filter built from the dim side in:\n$p")
       assert(p.contains("might_contain"),
         s"expected might_contain pruning on the fact side in:\n$p")
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
     }
   }
 

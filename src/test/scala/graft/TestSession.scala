@@ -17,12 +17,9 @@ object TestSession {
     * baseline a rule spec compares against — and restores the previous
     * exclusion list after, so nothing leaks into later suites.
     */
-  def withoutRules[T](spark: SparkSession, rules: Rule[_]*)(body: => T): T = {
-    val key = "spark.sql.optimizer.excludedRules"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, rules.map(_.ruleName).mkString(","))
-    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  def withoutRules[T](spark: SparkSession, rules: Rule[_]*)(body: => T): T =
+    Runeset.withConf(spark,
+      "spark.sql.optimizer.excludedRules" -> rules.map(_.ruleName).mkString(","))(body)
 
   /** The generated fixtures (TESTDATA.md). */
   val testdata = "/root/testdata"

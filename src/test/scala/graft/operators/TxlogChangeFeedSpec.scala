@@ -20,7 +20,7 @@ class TxlogChangeFeedSpec extends AnyFunSuite {
 
   test("replaying the row-level feed reconstructs every version's snapshot") {
     spark.sparkContext.setLogLevel("WARN")
-    val (files, perVersion) = Curation.txlogTableWithChanges(spark, dir, "c33spec")
+    val (files, perVersion) = Curation.txlogTableWithChanges(spark, dir)
     def readLive(live: Seq[String]): DataFrame =
       spark.read.schema("doc_id BIGINT, text STRING")
         .parquet(live.map(p => s"$files/$p"): _*)
@@ -49,7 +49,7 @@ class TxlogChangeFeedSpec extends AnyFunSuite {
 
   test("merge carries all four change types; carried-over rows and compaction emit nothing") {
     spark.sparkContext.setLogLevel("WARN")
-    val (files, perVersion) = Curation.txlogTableWithChanges(spark, dir, "c33spec2")
+    val (files, perVersion) = Curation.txlogTableWithChanges(spark, dir)
     // v5 (pure compaction): an empty feed
     assert(Curation.txlogChangeRows(spark, files, perVersion(5)).isEmpty,
       "the pure-compaction commit emitted change rows")
@@ -71,7 +71,7 @@ class TxlogChangeFeedSpec extends AnyFunSuite {
   }
 
   test("the add-only path plans without a join (the 100 TB append fast path)") {
-    val (files, perVersion) = Curation.txlogTableWithChanges(spark, dir, "c33spec3")
+    val (files, perVersion) = Curation.txlogTableWithChanges(spark, dir)
     val p = Curation.txlogChangeRows(spark, files, perVersion(0))
       .queryExecution.executedPlan.toString
     assert(!p.contains("Join"), s"an append commit must not pay a diff join:\n$p")

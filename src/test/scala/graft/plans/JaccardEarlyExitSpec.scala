@@ -98,25 +98,21 @@ class JaccardEarlyExitSpec extends AnyFunSuite {
     val jaccards = df.select(SortedArrayJaccard(col("x"), col("y"))).collect().map(_.getDouble(0))
     // a kernel whose generated Java does not compile fails the query
     // instead of falling back to interpreted evaluation
-    val fallback = "spark.sql.codegen.fallback"
-    val prev = spark.conf.getOption(fallback)
-    spark.conf.set(fallback, "false")
-    try for (c <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity);
-             strict <- Seq(false, true)) {
-      val jac = SortedArrayJaccard(col("x"), col("y"))
-      val q = df.filter(if (strict) jac > c else jac >= c)
-      val p = q.queryExecution.optimizedPlan.toString
-      assert(!p.contains("sorted_array_jaccard_at_least"),
-        s"threshold=$c strict=$strict rewritten:\n$p")
-      // Spark orders NaN above every double, as java.lang.Double.compare does
-      val expected = jaccards.count { j =>
-        val cmp = java.lang.Double.compare(j, c)
-        if (strict) cmp > 0 else cmp >= 0
+    try graft.Runeset.withConf(spark, "spark.sql.codegen.fallback" -> "false") {
+      for (c <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity);
+           strict <- Seq(false, true)) {
+        val jac = SortedArrayJaccard(col("x"), col("y"))
+        val q = df.filter(if (strict) jac > c else jac >= c)
+        val p = q.queryExecution.optimizedPlan.toString
+        assert(!p.contains("sorted_array_jaccard_at_least"),
+          s"threshold=$c strict=$strict rewritten:\n$p")
+        // Spark orders NaN above every double, as java.lang.Double.compare does
+        val expected = jaccards.count { j =>
+          val cmp = java.lang.Double.compare(j, c)
+          if (strict) cmp > 0 else cmp >= 0
+        }
+        assert(q.count() == expected, s"threshold=$c strict=$strict")
       }
-      assert(q.count() == expected, s"threshold=$c strict=$strict")
-    } finally {
-      prev.fold(spark.conf.unset(fallback))(spark.conf.set(fallback, _))
-      df.unpersist()
-    }
+    } finally df.unpersist()
   }
 }

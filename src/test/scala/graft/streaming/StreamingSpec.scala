@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.Runeset.withConf
+import graft.operators.StreamReplay.RocksDbStateStore
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -105,23 +107,23 @@ class StreamingSpec extends AnyFunSuite {
   test("transformWithState variant keeps identical per-user state semantics") {
     import spark.implicits._
     // transformWithState needs column families => RocksDB provider
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[EventRow](spark)
-    val q = StreamOps.statefulRunningTotalsTws(in.toDS())
-      .writeStream.outputMode("update")
-      .format("memory").queryName("tws_out").start()
-    try {
-      in.addData(ev(1, "2024-01-01 00:00:00", user = 7, v = 2.0),
-        ev(2, "2024-01-01 00:01:00", user = 7, v = 3.0))
-      q.processAllAvailable()
-      in.addData(ev(3, "2024-01-01 00:02:00", user = 7, v = 5.0))
-      q.processAllAvailable()
-      val latest = spark.table("tws_out")
-        .groupBy("user_id").agg(org.apache.spark.sql.functions.max("n_events").as("n"))
-        .as[(Long, Long)].collect().toMap
-      assert(latest(7L) == 3L)
-    } finally q.stop()
+    withConf(spark, RocksDbStateStore) {
+      val in = MemoryStream[EventRow](spark)
+      val q = StreamOps.statefulRunningTotalsTws(in.toDS())
+        .writeStream.outputMode("update")
+        .format("memory").queryName("tws_out").start()
+      try {
+        in.addData(ev(1, "2024-01-01 00:00:00", user = 7, v = 2.0),
+          ev(2, "2024-01-01 00:01:00", user = 7, v = 3.0))
+        q.processAllAvailable()
+        in.addData(ev(3, "2024-01-01 00:02:00", user = 7, v = 5.0))
+        q.processAllAvailable()
+        val latest = spark.table("tws_out")
+          .groupBy("user_id").agg(org.apache.spark.sql.functions.max("n_events").as("n"))
+          .as[(Long, Long)].collect().toMap
+        assert(latest(7L) == 3L)
+      } finally q.stop()
+    }
   }
 
   test("ingest gate: corpus membership in keyed state survives stop + resume") {
@@ -131,11 +133,7 @@ class StreamingSpec extends AnyFunSuite {
     // run, and a restarted query must recover it from the RocksDB
     // checkpoint — the resumed query gets an EMPTY initial state, so
     // a rejected_exact verdict after restart can only come from state
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, RocksDbStateStore) {
       val ckpt = java.nio.file.Files.createTempDirectory("graft_gate_ckpt").toString
       val in = MemoryStream[IngestDoc](spark)
       val verdicts = scala.collection.concurrent.TrieMap.empty[Long, String]
@@ -174,19 +172,12 @@ class StreamingSpec extends AnyFunSuite {
           s"corpus membership lost across restart: ${verdicts.toMap}")
         assert(verdicts(6L) == "accepted")
       } finally q2.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
   test("q92 timers: inline gap-close vs watermark-driven timer-close") {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, RocksDbStateStore) {
       val in = MemoryStream[TimerEvent](spark)
       val q = SessionTimerGate.sessions(
         in.toDF().withWatermark("ts", "0 seconds").as[TimerEvent])
@@ -224,19 +215,12 @@ class StreamingSpec extends AnyFunSuite {
           (2L, "2024-01-01 00:01:00", "2024-01-01 00:01:00", 1L, 5.0, "timer")))
         // user 3's own session stays open (18:10 + 8 h > watermark)
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
   test("q92 timers survive stop + resume from the RocksDB checkpoint") {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, RocksDbStateStore) {
       val ckpt = java.nio.file.Files.createTempDirectory("graft_timer_ckpt").toString
       val in = MemoryStream[TimerEvent](spark)
       val out = scala.collection.concurrent.TrieMap.empty[(Long, String), (Long, String)]
@@ -269,9 +253,6 @@ class StreamingSpec extends AnyFunSuite {
           (7L, "2024-01-01 00:00:00.0") -> ((2L, "timer"))),
           s"timer did not survive the restart: ${out.toMap}")
       } finally q2.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -447,11 +428,7 @@ class StreamingSpec extends AnyFunSuite {
     // the production durable-keyed-state configuration (roadmap
     // README.md:107-109): RocksDB state store + a restart that must
     // recover per-key state from the checkpoint, not recompute it
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, RocksDbStateStore) {
       val ckpt = java.nio.file.Files.createTempDirectory("graft_rocks_ckpt").toString
       val in = MemoryStream[EventRow](spark)
       // foreachBatch sink: the memory sink refuses checkpoint recovery
@@ -487,9 +464,6 @@ class StreamingSpec extends AnyFunSuite {
         assert(latest(7L) == ((3L, 10.0)),
           s"state not recovered across restart: ${latest.toMap}")
       } finally q2.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
