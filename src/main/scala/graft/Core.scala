@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.graft.RelationBridge
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.StructType
 
 /** A named query in the graft inventory.
@@ -29,15 +32,37 @@ object Q {
   * uniform and pushdown-friendly.
   */
 object Tables {
-  def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    parquet(spark, s"$dir/$name.parquet")
+
+  private val relations = Artifact[BaseRelation]("relation")
+
+  /** Fixture table `name` of data dir `dir`. Its relation (the path
+    * check, the file listing and the footer schema of
+    * [[parquet]]) is resolved once per session and fixture generation,
+    * as Spark's `SessionCatalog.tableRelationCache` resolves a catalog
+    * table once; the fingerprint in the [[Artifact]] key stands in for
+    * the catalog's invalidation. The key carries the session's id, so
+    * a relation never crosses sessions. Each call returns a new frame
+    * from `baseRelationToDataFrame`, whose columns get new ids, so two
+    * reads of one table self-join without ambiguity.
+    */
+  def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val relation = relations.memo(dir, name, RelationBridge.sessionId(spark)) {
+      parquet(spark, s"$dir/$name.parquet").queryExecution.analyzed match {
+        case r: LogicalRelation => r.relation
+        case other => throw new IllegalStateException(s"$dir/$name.parquet resolved to $other")
+      }
+    }
+    spark.baseRelationToDataFrame(relation)
+  }
 
   /** `spark.read.parquet(paths*)` without its schema-inference job.
     * Spark infers a parquet schema by reading one footer inside a
     * one-task Spark job on every call; this reads the same footer on
     * the driver, through the same `readSchemaFromFooter` and converter,
     * and hands the result to the reader. Every schema-less parquet
-    * read goes through here.
+    * read goes through here. It resolves on every call: its paths
+    * include txlog files and temp outputs that change under one name;
+    * fixture tables go through [[read]].
     */
   def parquet(spark: SparkSession, paths: String*): DataFrame =
     spark.read.schema(footerSchema(spark, paths)).parquet(paths: _*)
@@ -124,9 +149,10 @@ object Tables {
     * for every other reader in the session.
     */
   private[graft] def eventsRawFrame(spark: SparkSession, dir: String): DataFrame = {
-    // harmless when ts is already micros; required to decode nanos
+    // harmless when ts is already micros; required to decode nanos, and
+    // set on every call because the reader reads it at execution
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    parquet(spark, s"$dir/events.parquet")
+    read(spark, dir, "events")
   }
 
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame =

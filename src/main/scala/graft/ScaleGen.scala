@@ -78,7 +78,7 @@ object ScaleGen {
 
     if (!tables("documents") && !tables("embeddings")) { spark.stop(); return }
 
-    val docs = Tables.parquet(spark, s"$srcDir/documents.parquet")
+    val docs = Tables.documents(spark, srcDir)
     val nDocs = docs.count()
     docs.crossJoin(reps)
       .select(
@@ -93,7 +93,7 @@ object ScaleGen {
       .repartition(host.shufflePartitions)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
 
-    val emb = Tables.parquet(spark, s"$srcDir/embeddings.parquet")
+    val emb = Tables.embeddings(spark, srcDir)
     val nVecs = emb.count()
     val dim = graft.functions.TextVec.EmbDim
     val shifted = (0 until factor).map { k =>

@@ -1671,7 +1671,7 @@ object MediaPipeline {
     */
   def fromDocuments(spark: SparkSession, dir: String): Dataset[MediaRow] = {
     import spark.implicits._
-    graft.Tables.parquet(spark, s"$dir/documents.parquet")
+    graft.Tables.documents(spark, dir)
       .select(col("doc_id").as("media_id"),
         when(col("doc_id") % 2 === 0, "image").otherwise("audio").as("kind"),
         col("text").cast("binary").as("payload"),

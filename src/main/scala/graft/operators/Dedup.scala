@@ -292,7 +292,7 @@ object Dedup {
 
   /** Spark side of [[embPairsCtes]]: verified near-dup pairs
     * `(id_a, id_b, cos_sim)`, cosine > 0.35, from the 2-band
-    * hyperplane bucketing. Cached candidates feed both verify joins.
+    * hyperplane bucketing.
     */
   private def verifiedEmbeddingPairs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
@@ -312,8 +312,11 @@ object Dedup {
   private[graft] def verifiedEmbeddingPairsParam(s: org.apache.spark.sql.SparkSession,
       d: String, nBands: Int, bitsPerBand: Int,
       cosThreshold: Double = 0.35): org.apache.spark.sql.DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val e = emb.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
+    // spread the one-split scan: both band-join sides then read one
+    // reused round-robin exchange, and the bucketing and the verify run
+    // in defaultParallelism tasks, not one (a no-op at scale)
+    val e = Tables.spread(Tables.embeddings(s, d)
+      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm")))
     // seeded constant planes: band-bucket assignment is a pure projection
     def bit(j: Int, w: Int) =
       when(dot(col("embedding"), seededPlaneCol(j)) > 0, lit(w)).otherwise(lit(0))
@@ -322,7 +325,6 @@ object Dedup {
     val buck = e
       .select(col("vec_id") +: col("embedding") +: col("nrm") +:
         (0 until nBands).map(b => bandBucket(b).as(s"b$b")): _*)
-      .cache() // feeds both sides of the band join
     // Carry (embedding, nrm) THROUGH the band join so the exact
     // verify runs STREAMED over the join output and only surviving
     // pairs are ever shuffled again (the round-5 scale probe caught

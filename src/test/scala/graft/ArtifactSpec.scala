@@ -6,9 +6,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Artifact]]'s contract: one build per (table, variant, dir,
-  * source fingerprint), a rebuild when the source file is rewritten, no
-  * memo of a build that throws, build time counted only for completed
-  * builds, and a registry that names every artifact.
+  * source fingerprint), a rebuild when the source file is rewritten that
+  * drops the older entry, no memo of a build that throws, build time
+  * counted only for completed builds and only once when builds nest,
+  * and a registry that names every artifact.
   */
 class ArtifactSpec extends AnyFunSuite {
 
@@ -81,6 +82,31 @@ class ArtifactSpec extends AnyFunSuite {
     assert(afterBuild >= 20L * 1000 * 1000)
     a.memo(dir, "documents")(fail("a hit must not build"))
     assert(a.buildNanos.get() == afterBuild)
+  }
+
+  test("a build nested in another counts only toward its own artifact") {
+    val outer = Artifact[Int]("spec_outer")
+    val inner = Artifact[Int]("spec_inner")
+    val dir = fixture(3)
+    assert(outer.memo(dir, "documents") {
+      inner.memo(dir, "documents") { Thread.sleep(300); 1 } + 1
+    } == 2)
+    assert(inner.buildNanos.get() >= 300L * 1000 * 1000)
+    assert(outer.buildNanos.get() < 200L * 1000 * 1000,
+      s"outer build counted ${outer.buildNanos.get() / 1e6} ms, the nested build included")
+  }
+
+  test("building a new generation drops the older generation's entry") {
+    val a = Artifact[Int]("spec_generations")
+    val dir = fixture(5)
+    a.memo(dir, "documents")(1)
+    a.memo(dir, "documents", "other")(2)
+    assert(a.entries == 2)
+    writeDocs(dir, 7)
+    assert(a.memo(dir, "documents")(3) == 3)
+    assert(a.entries == 2) // the new "" entry replaced the old; "other" is its own key
+    assert(a.memo(dir, "documents", "other")(4) == 4)
+    assert(a.entries == 2)
   }
 
   test("the registry names every artifact, each once") {

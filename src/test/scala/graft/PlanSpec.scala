@@ -123,6 +123,26 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), s"bucket join must not cartesian:\n$p")
   }
 
+  test("d06: the band verify reads no cache and runs over more than one partition") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val df = SparkEntry.queries("d06_embedding_near_dup")(spark, dir)
+    val cached = df.queryExecution.optimizedPlan.collect { case r: InMemoryRelation => r }
+    assert(cached.isEmpty, s"d06 plans a cached frame:\n${df.queryExecution.optimizedPlan}")
+    assert(df.collect().nonEmpty)
+    val bandJoins = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case j: BroadcastHashJoinExec if j.leftKeys.exists(_.references.exists(_.name == "band")) => j
+    }
+    assert(bandJoins.nonEmpty, s"no broadcast band join in:\n${df.queryExecution.executedPlan}")
+    bandJoins.foreach { j =>
+      val streamed = if (j.buildSide == BuildRight) j.left else j.right
+      val parts = streamed.execute().getNumPartitions
+      assert(parts > 1, s"the verify streams $parts partition(s) at local[4]:\n$j")
+    }
+  }
+
   test("s04: trained-IVF probe joins on the cell key and broadcasts the query side") {
     val p = plan("s04_ann_ivf_kmeans")
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast cell-probe join in:\n$p")
