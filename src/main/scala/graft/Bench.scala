@@ -10,28 +10,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Runeset.host.buildSession()
-
-    // untimed warmup: JIT + codegen + parquet footer caches, including
-    // the md5/higher-order/codegen-kernel paths the (alphabetically
-    // first) dedup queries hit — otherwise their timings carry the
-    // one-time compilation cost and dominate run-to-run variance
-    spark.range(1000).selectExpr("sum(id)").collect()
-    Tables.lineitem(spark, sfDir).limit(10).count()
-    val wDocs = Tables.documents(spark, sfDir).limit(64)
-      .selectExpr("array_sort(array_distinct(split(text, ' '))) AS ts")
-    wDocs.select(
-      graft.functions.MinHashSigs(org.apache.spark.sql.functions.col("ts"), 8).as("mh"),
-      org.apache.spark.sql.functions.expr(
-        "aggregate(ts, 0, (a, t) -> a + length(t))").as("n")).count()
-    val wEmb = Tables.embeddings(spark, sfDir).limit(64)
-      .select(org.apache.spark.sql.functions.col("vec_id"),
-        org.apache.spark.sql.functions.col("embedding"))
-    wEmb.alias("a").crossJoin(wEmb.alias("b"))
-      .select(graft.functions.FloatVecDot(
-        org.apache.spark.sql.functions.col("a.embedding"),
-        org.apache.spark.sql.functions.col("b.embedding")).as("d"))
-      .agg(org.apache.spark.sql.functions.sum("d")).count()
-    spark.catalog.clearCache()
+    warmUp(spark, sfDir)
 
     // SPARK_GRAFT_BENCH_ONLY=q64_json_props,d07_dedup_clusters — dev-run
     // filter for timing a handful of queries in isolation; unset (the
@@ -258,5 +237,33 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","total_with_kernels":$totalWithKernels,"runs":$RunsPerQuery,"agg":"min","label":"$label","n_queries":${results.length},"queries":{},"errors":$errs,"queries_file":"$out","compact":true,"sf":"$sfDir"}"""
     println(compact)
     spark.stop()
+  }
+
+  /** Untimed warmup: JIT + codegen + parquet footer caches, including
+    * the md5/higher-order/codegen-kernel paths the (alphabetically
+    * first) dedup queries hit — otherwise their timings carry the
+    * one-time compilation cost and dominate run-to-run variance. Reads
+    * only the tables `dir` holds: a ScaleGen dir has documents and
+    * embeddings alone unless asked for events.
+    */
+  private[graft] def warmUp(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+    import org.apache.spark.sql.functions.{col, expr, sum}
+    def has(table: String) = new java.io.File(s"$dir/$table.parquet").exists()
+    spark.range(1000).selectExpr("sum(id)").collect()
+    if (has("lineitem")) Tables.lineitem(spark, dir).limit(10).count()
+    if (has("documents")) {
+      val wDocs = Tables.documents(spark, dir).limit(64)
+        .selectExpr("array_sort(array_distinct(split(text, ' '))) AS ts")
+      wDocs.select(graft.functions.MinHashSigs(col("ts"), 8).as("mh"),
+        expr("aggregate(ts, 0, (a, t) -> a + length(t))").as("n")).count()
+    }
+    if (has("embeddings")) {
+      val wEmb = Tables.embeddings(spark, dir).limit(64)
+        .select(col("vec_id"), col("embedding"))
+      wEmb.alias("a").crossJoin(wEmb.alias("b"))
+        .select(graft.functions.FloatVecDot(col("a.embedding"), col("b.embedding")).as("d"))
+        .agg(sum("d")).count()
+    }
+    spark.catalog.clearCache()
   }
 }

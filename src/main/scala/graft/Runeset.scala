@@ -47,6 +47,14 @@ object Runeset {
     Runeset(master = s"local[$cpus]", shufflePartitions = cpus)
   }
 
+  /** The root of the per-run streaming replay directories:
+    * `SPARK_GRAFT_REPLAY_DIR`, or java.io.tmpdir.
+    */
+  def replayRoot: java.nio.file.Path =
+    sys.env.get("SPARK_GRAFT_REPLAY_DIR")
+      .map(java.nio.file.Paths.get(_))
+      .getOrElse(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+
   /** Drops every cached table and every persisted RDD between queries.
     * `clearCache` alone leaves `localCheckpoint` blocks: the
     * propagation queries leave one per round, and the orphans skew

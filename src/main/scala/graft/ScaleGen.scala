@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Scale-probe corpus generator: derives an N× corpus from a driver
-  * sf directory so the headline ⟨ns⟩ queries can be MEASURED a data
-  * decade up (the round-2 verdict's top item — the 100 TB story
-  * should rest on measured scaling, not only plan shapes).
+/** Scale corpus generator: derives an N× corpus from a fixture sf
+  * directory so the headline ⟨ns⟩ queries can be MEASURED a data
+  * decade up, by pointing `Bench` at the output dir (the round-2
+  * verdict's top item — the 100 TB story should rest on measured
+  * scaling, not only plan shapes).
   *
   * Replication preserves workload *structure* instead of stacking
   * exact copies (which would distort dedup semantics):
@@ -36,8 +37,8 @@ import org.apache.spark.sql.functions._
   *
   * Usage: ScaleGen <srcSfDir> <outDir> <factor>
   * `SPARK_GRAFT_SCALEGEN_TABLES` (default `documents,embeddings`)
-  * picks the tables — `events` lets a probe add the events table to
-  * an existing scaled dir without regenerating the corpus.
+  * picks the tables — `events` adds the events table to an existing
+  * scaled dir without regenerating the corpus.
   */
 object ScaleGen {
 

@@ -216,8 +216,8 @@ object AnnKmeans {
     * keeps per-cell occupancy — and d11's Σ n_c² pair work, and the
     * cell join's shuffle parallelism — bounded per row; SemDeDup runs
     * k ≈ 11k on 100M docs). The oracle-registered s04/d11 pin k = 8,
-    * right-sized for the 500-row oracle corpus; ScaleProbe's
-    * d11_wide_k64 runs the production reconfiguration at sf1.
+    * right-sized for the 500-row oracle corpus; s22 and s23 pass the
+    * corpus-derived [[derivedK]].
     * Training is sample-bounded (see object Scaladoc); the model path
     * switches from plan literal to one-row broadcast frame above
     * [[LiteralModelMaxK]] — both paths are bit-identical
@@ -461,32 +461,6 @@ object AnnKmeans {
       q.unpersist(blocking = false)
       out
     }
-  }
-
-  /** s24's decade decomposition: the nightly index build under the
-    * DERIVED production knob (k ∝ corpus — timed as the amortized
-    * term) apart from two serving probes at different query-batch
-    * sizes. probe cost tracking the QUERY COUNT (probe100 ≈
-    * 10× probe10's marginal work, both ~flat across corpus decades
-    * under the occupancy-flat knob) is the measured
-    * query-cost-∝-queries claim.
-    */
-  private[graft] def s24ProbeStats(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    import s.implicits._
-    val k = derivedK(s, d)
-    val t0 = System.nanoTime()
-    val (idxPath, centPath) = s24BuildIndex(s, d, k)
-    val buildSec = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val n10 = s24Probe(s, d, idxPath, centPath, queryMax = 10).count()
-    val probe10Sec = (System.nanoTime() - t1) / 1e9
-    val t2 = System.nanoTime()
-    val n100 = s24Probe(s, d, idxPath, centPath, queryMax = 100).count()
-    val probe100Sec = (System.nanoTime() - t2) / 1e9
-    Seq((k, n10, n100, buildSec, probe10Sec, probe100Sec))
-      .toDF("k", "rows_q10", "rows_q100", "build_sec", "probe10_sec",
-        "probe100_sec")
   }
 
   /** INCREMENTAL ANN INDEX INGEST (s25 — the maintenance half s24

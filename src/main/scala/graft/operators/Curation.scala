@@ -3358,60 +3358,6 @@ object Curation {
       .orderBy(col("bucket"))
   }
 
-  /** c28's decade decomposition for the scale probe: the standing
-    * table build (amortized), the POINT-DELETE COMMIT (write the
-    * handed-in key list as an equality-delete file + append one log
-    * entry — the cost a GDPR/CDC delete pays), and the MOR scan that
-    * serves it. `keyMaxDocId` caps the delete feed at the BASE
-    * fixture's ids (ScaleGen replicas re-key upward), so across
-    * decades the TABLE grows 10× while the delete is CONSTANT —
-    * commit_sec staying flat is the measured cost-∝-delta claim; the
-    * scan tracks the table (it reads it).
-    */
-  private[graft] def c28ProbeStats(s: SparkSession, d: String,
-      keyMaxDocId: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val t0 = System.nanoTime()
-    val base = StreamReplay.tempReplayDir("c28probe")
-    val files = base.resolve("files").toString
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("text"), (col("doc_id") % 16).as("bucket"))
-    docs.write.mode("overwrite").partitionBy("bucket").parquet(files)
-    val nTable = Tables.parquet(s, files).count()
-    val buildSec = (System.nanoTime() - t0) / 1e9
-    // the delete feed: a FIXED key list (materialized before the
-    // timed commit — request generation is the caller's feed, not
-    // the commit)
-    val keys = Tables.documents(s, d)
-      .filter(col("doc_id") % 100 === 17)
-      .filter(keyMaxDocId.map(col("doc_id") <= _).getOrElse(lit(true)))
-      .select(col("doc_id").as("del_id"))
-      .localCheckpoint()
-    val nKeys = keys.count()
-    // the delete file lives NEXT TO the bucket tree (a sibling dir, as
-    // the c28 query's merge files do under txlogTable's flat layout —
-    // here the table is hive-partitioned, so a child dir would break
-    // partition discovery on the scan)
-    val dvPath = base.resolve("dv0").toString
-    val t1 = System.nanoTime()
-    keys.coalesce(1).write.mode("overwrite").parquet(dvPath)
-    val logDir = base.resolve("_log")
-    java.nio.file.Files.createDirectories(logDir)
-    java.nio.file.Files.write(logDir.resolve("00000000.json"),
-      s"""{"action":"dv","path":"../dv0"}""".getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-    val commitSec = (System.nanoTime() - t1) / 1e9
-    val t2 = System.nanoTime()
-    val dv = Tables.parquet(s, dvPath)
-    val nLive = Tables.parquet(s, files)
-      .join(broadcast(dv), col("doc_id") === col("del_id"), "left_anti")
-      .count()
-    val scanSec = (System.nanoTime() - t2) / 1e9
-    Seq((nTable, nKeys, nLive, buildSec, commitSec, scanSec))
-      .toDF("n_table", "n_del_keys", "n_live", "build_sec", "commit_sec",
-        "scan_sec")
-  }
-
   /** SCHEMA EVOLUTION ACROSS TXLOG COMMITS (round-13 verdict item 4):
     * every long-lived table eventually adds a column, and a
     * log-structured table does it as METADATA — a schema action in

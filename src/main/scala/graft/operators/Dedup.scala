@@ -168,25 +168,11 @@ object Dedup {
          |JOIN groups ga ON p.id_a = ga.rep_id
          |JOIN groups gb ON p.id_b = gb.rep_id
          |ORDER BY id_a, id_b""".stripMargin }
-  ) { (s, d) => simhashNearDupParam(s, d, nBits = 32, nChunks = 4, maxHamming = 3) }
-
-  /** Parameterized Manku chunk-join SimHash near-dup (the d04 body).
-    * `nBits`/`nChunks` are the scale knobs: chunk width = nBits /
-    * nChunks, bucket count per chunk table = 2^chunkWidth, and the
-    * pigeonhole guarantee (Hamming ≤ maxHamming ⟹ some chunk
-    * identical) needs nChunks > maxHamming. The registered d04 pins
-    * 32/4 (8-bit chunks, 256 buckets — right-sized for the sf0.01
-    * oracle corpus); ScaleProbe runs 64/4 (16-bit chunks, 65k
-    * buckets) at sf1 — the same "grow buckets with the corpus"
-    * reconfiguration production applies, available because
-    * [[graft.functions.SimHashBits]] draws up to 64 bits from one
-    * digest.
-    */
-  private[graft] def simhashNearDupParam(s: org.apache.spark.sql.SparkSession,
-      d: String, nBits: Int, nChunks: Int, maxHamming: Int): org.apache.spark.sql.DataFrame = {
-    require(nChunks > maxHamming, "pigeonhole needs more chunks than the Hamming budget")
-    require(nBits % nChunks == 0, s"nBits=$nBits must split evenly into $nChunks chunks")
-    val chunkBits = nBits / nChunks
+  ) { (s, d) =>
+    // 4 chunks of 8 bits (256 buckets per chunk table); Hamming ≤ 3
+    // ⟹ some chunk is identical, by pigeonhole (4 chunks > 3)
+    val nChunks = 4
+    val chunkBits = 8
     val mask = (1L << chunkBits) - 1
     val docs = Tables.documents(s, d)
     // Per-row codegen simhash kernel: ONE md5 per distinct token, all
@@ -200,7 +186,7 @@ object Dedup {
     // task (Tables.spread, guide §2.5)
     val sh = graft.Tables.spread(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id"),
-        graft.functions.SimHashBits(tokenSet(col("text")), nBits).as("simhash"))
+        graft.functions.SimHashBits(tokenSet(col("text")), nChunks * chunkBits).as("simhash"))
     val groups = sh.groupBy(col("simhash"))
       .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("n_docs"))
       .cache()
@@ -214,7 +200,7 @@ object Dedup {
           && col("a.rep_id") < col("b.rep_id"))
       .select(col("a.rep_id").as("id_a"), col("b.rep_id").as("id_b"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= 3)
       .distinct()
     pairs
       .join(groups.alias("ga"), col("id_a") === col("ga.rep_id"))
@@ -291,27 +277,18 @@ object Dedup {
   }
 
   /** Spark side of [[embPairsCtes]]: verified near-dup pairs
-    * `(id_a, id_b, cos_sim)`, cosine > 0.35, from the 2-band
-    * hyperplane bucketing.
+    * `(id_a, id_b, cos_sim)`, cosine > 0.35, from 2 bands of 2 seeded
+    * hyperplane bits each (plane j of band b is seededPlane(b·2 + j)).
+    * The band count is the recall knob (each OR'd band is another
+    * chance to collide) and the bits per band the occupancy knob:
+    * candidate pairs grow as Σ_buckets O(n_b²), so 2×2 is right-sized
+    * for the sf0.01 correctness corpus and a larger corpus wants about
+    * log₂ of its growth in extra bits.
     */
   private def verifiedEmbeddingPairs(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    verifiedEmbeddingPairsParam(s, d, nBands = 2, bitsPerBand = 2)
-
-  /** Parameterized bucket-then-verify near-dup pairs. `bitsPerBand`
-    * is THE scale knob: bits ∝ log₂(corpus) keeps per-bucket
-    * occupancy (and therefore candidate-pair count, which grows as
-    * Σ_buckets O(n_b²)) roughly constant per row; `nBands` is the
-    * recall knob (each extra OR'd band is another chance to collide).
-    * The seeded planes make any width available with no retuning —
-    * plane j of band b is seededPlane(b·bitsPerBand + j). The
-    * oracle-registered d06/d07 pin 2×2 (right-sized for the sf0.01
-    * correctness corpus); ScaleProbe runs wider tables at sf1 — the
-    * same production reconfiguration a 100 TB deployment applies.
-    */
-  private[graft] def verifiedEmbeddingPairsParam(s: org.apache.spark.sql.SparkSession,
-      d: String, nBands: Int, bitsPerBand: Int,
-      cosThreshold: Double = 0.35): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
+    val nBands = 2
+    val bitsPerBand = 2
     // spread the one-split scan: both band-join sides then read one
     // reused round-robin exchange, and the bucketing and the verify run
     // in defaultParallelism tasks, not one (a no-op at scale)
@@ -347,7 +324,7 @@ object Dedup {
           .otherwise(dot(col("a.embedding"), col("b.embedding"))
             / (col("a.nrm") * col("b.nrm")))
           .as("cos_sim"))
-      .filter(col("cos_sim") > cosThreshold)
+      .filter(col("cos_sim") > 0.35)
       .distinct()
   }
 
@@ -812,8 +789,10 @@ object Dedup {
     * corpus (the paper runs k≈11k on 100M docs) so per-cell occupancy
     * stays bounded; the within-cell compare is one equi-join shuffle
     * keyed on cell, the verdict one groupBy on vec_id, and the
-    * verify dot product is the codegen FloatVecDot kernel. k=8 here
-    * is right-sized for the 500-row oracle corpus.
+    * verify dot product is the codegen FloatVecDot kernel. k (trained
+    * cells) bounds both the Σ n_c² pair work and the cell join's
+    * shuffle parallelism; k=8 here is right-sized for the 500-row
+    * oracle corpus.
     */
   val d11SemanticDedup = Q(
     "d11_semantic_dedup",
@@ -834,17 +813,8 @@ object Dedup {
        |       d.max_sim AS max_sim, d.dup_of IS NOT NULL AS is_dup
        |FROM fin f LEFT JOIN dup d ON f.vec_id = d.vec_id
        |ORDER BY f.vec_id""".stripMargin
-  ) { (s, d) => semanticDedupParam(s, d, k = 8) }
-
-  /** Parameterized SemDeDup verdict frame. `k` (trained cells) is
-    * THE scale knob — it bounds both the Σ n_c² pair work and the
-    * cell join's shuffle parallelism; the oracle-registered d11 pins
-    * k = 8 for the 500-row corpus, ScaleProbe's d11_wide_k64 runs
-    * the production width.
-    */
-  private[graft] def semanticDedupParam(s: org.apache.spark.sql.SparkSession,
-      d: String, k: Int): org.apache.spark.sql.DataFrame = {
-    val fin = AnnKmeans.trainedFinParam(s, d, k)
+  ) { (s, d) =>
+    val fin = AnnKmeans.trainedFinParam(s, d, 8)
     val qual = fin.alias("hi")
       .join(fin.alias("lo"),
         col("hi.cell") === col("lo.cell") && col("lo.vec_id") < col("hi.vec_id"))
@@ -1373,14 +1343,8 @@ object Dedup {
     */
   private[graft] def d16ProbeFrame(s: org.apache.spark.sql.SparkSession,
       d: String, indexPath: String, prefixLen: Int,
-      deltaMaxDocId: Option[Long] = None,
       materialize: Boolean = true): org.apache.spark.sql.DataFrame = {
-    // deltaMaxDocId: scale-probe hook — ScaleGen replicas re-key
-    // doc_id upward, so capping the shard at the BASE fixture's max
-    // id holds the delta FIXED while the corpus (and index) grow a
-    // decade: the geometry the cost-∝-delta claim is measured in
     val delta = Tables.documents(s, d).filter(col("source").isin(IngestShard: _*))
-      .filter(deltaMaxDocId.map(col("doc_id") <= _).getOrElse(lit(true)))
     val dbands = bandEmission(tokenSetGroups(delta))
       .withColumn("hp", substring(col("h"), 1, prefixLen))
       .cache() // feeds the prefix collect AND the probe join
@@ -1429,10 +1393,9 @@ object Dedup {
       // dbands cache via its harness hygiene)
     else {
       // Materialize the probe result (pairs are output-sized) so the
-      // dbands cache can be released HERE — callers that loop probes
-      // (d16ProbeStats, the scale harness) would otherwise accumulate
-      // one cached delta band frame per probe, the exact leak the d14
-      // comment above warns about.
+      // dbands cache can be released HERE — a caller that loops probes
+      // would otherwise accumulate one cached delta band frame per
+      // probe, the exact leak the d14 comment above warns about.
       val result = scan.localCheckpoint()
       dbands.unpersist(blocking = false)
       result
@@ -1492,25 +1455,6 @@ object Dedup {
     val (path, prefixLen, _) = d16BuildIndex(s, d)
     d16ProbeFrame(s, d, path, prefixLen)
       .orderBy(col("id_new"), col("id_corpus"))
-  }
-
-  /** d16's build/probe decomposition for the scale probe: index built
-    * over the corpus at scale (timed as the amortized nightly term),
-    * then the fixed-size shard probe timed separately — the datum a
-    * "cost ∝ delta, not corpus" claim needs. Returns a one-row stats
-    * frame.
-    */
-  private[graft] def d16ProbeStats(s: org.apache.spark.sql.SparkSession,
-      d: String, deltaMaxDocId: Option[Long] = None): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val t0 = System.nanoTime()
-    val (path, prefixLen, nSets) = d16BuildIndex(s, d)
-    val buildSec = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val nPairs = d16ProbeFrame(s, d, path, prefixLen, deltaMaxDocId).count()
-    val probeSec = (System.nanoTime() - t1) / 1e9
-    Seq((nSets, prefixLen, nPairs, buildSec, probeSec))
-      .toDF("corpus_sets", "prefix_len", "n_pairs", "build_sec", "probe_sec")
   }
 
   def all: Seq[Q] = Seq(d01DedupExact, d02MinhashSignature, d03LshNearDup,

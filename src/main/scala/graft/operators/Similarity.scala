@@ -1790,8 +1790,7 @@ object Similarity {
     * O(n²/256) indexing term; the sample cap makes training linear
     * and leaves one full-corpus n·k assignment pass. The
     * registered spelling IS the scale-safe configuration — no human
-    * sets k ([[knnGraphParam]] remains for fixed-knob decade
-    * pairings, ScaleProbe's s22_wide_k64/k256). The candidate pairs are
+    * sets k. The candidate pairs are
     * consumed by q57's MERGEABLE top-k aggregator IN THE JOIN'S OWN
     * STAGE — a row_number window here would shuffle and sort the
     * full within-cell pair set (occupancy × n rows — the d11 lesson
@@ -1827,9 +1826,8 @@ object Similarity {
     knnGraphFrom(AnnKmeans.trainedFinParam(s, d, AnnKmeans.derivedK(s, d)))
   }
 
-  /** s22's graph construction over any (vec_id, embedding, nrm, cell)
-    * assignment frame — shared by the registered query (s03's 8
-    * seeded cells) and [[knnGraphParam]] (trained cells at k ∝ n).
+  /** s22's graph construction over its cached (vec_id, embedding,
+    * nrm, cell) assignment frame.
     */
   private def knnGraphFrom(cells: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val scored = knnScored(cells)
@@ -1892,19 +1890,6 @@ object Similarity {
   private[graft] def knnScoredProbe(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     knnScored(AnnKmeans.trainedFinParam(s, d, AnnKmeans.derivedK(s, d)))
-
-  /** s22 at the PRODUCTION knob — trained k-means cells
-    * ([[AnnKmeans.trainedFinParam]], the d11/s04 machinery with the
-    * k-independent ArgmaxDot assignment) at k ∝ corpus size, keeping
-    * per-cell occupancy (and so pairs-per-vector) constant across
-    * decades: the total candidate count is occupancy × n — LINEAR in
-    * the corpus. Probe-only (ScaleProbe s22_wide_k64 at sf1,
-    * s22_wide_k256 at sf10), like d11's wide twins: the oracle
-    * corpus is too small for wide cells to rank nontrivially.
-    */
-  private[graft] def knnGraphParam(s: org.apache.spark.sql.SparkSession,
-      d: String, k: Int): org.apache.spark.sql.DataFrame =
-    knnGraphFrom(AnnKmeans.trainedFinParam(s, d, k))
 
   /** The number of unrolled greedy steps s23 runs — a CAP, not a
     * truncation: the walk's cosine strictly increases on every move,

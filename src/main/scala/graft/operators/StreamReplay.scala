@@ -35,15 +35,13 @@ import org.apache.spark.sql.types._
   */
 object StreamReplay {
 
-  /** Per-run replay temp directory under java.io.tmpdir (or
-    * SPARK_GRAFT_REPLAY_DIR), removed on JVM exit — the ONE place
-    * that owns root resolution + the cleanup hook (review r11: three
+  /** Per-run replay temp directory under [[graft.Runeset.replayRoot]]
+    * (java.io.tmpdir or SPARK_GRAFT_REPLAY_DIR), removed on JVM exit —
+    * the ONE place that owns the cleanup hook (review r11: three
     * inline copies had accumulated).
     */
   private[graft] def tempReplayDir(name: String): java.nio.file.Path = {
-    val root = sys.env.get("SPARK_GRAFT_REPLAY_DIR")
-      .map(java.nio.file.Paths.get(_))
-      .getOrElse(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    val root = graft.Runeset.replayRoot
     java.nio.file.Files.createDirectories(root)
     val base = java.nio.file.Files.createTempDirectory(root, s"graft_${name}_")
     cleanupOnExit(base)
@@ -125,7 +123,7 @@ object StreamReplay {
 
   /** Source-size handoff from the stream constructors to the replay
     * starters (below): queries build their source then start through
-    * [[fileSinkReplay]]/[[drainCount]] in the same sequential call
+    * [[fileSinkReplay]] in the same sequential call
     * chain, so a session conf carries the byte size across.
     */
   private val SourceBytesKey = "graft.replay.source_bytes"
@@ -1408,60 +1406,16 @@ object StreamReplay {
     * geometries, so the chunked==single-batch pin can never drift).
     */
   private[graft] def sessionReplay(s: org.apache.spark.sql.SparkSession,
-      src: org.apache.spark.sql.DataFrame, name: String): org.apache.spark.sql.DataFrame =
-    fileSinkReplay(s, sessionAggOf(src), name)
-      .orderBy(col("user_id"), col("session_start"))
-
-  /** q88's watermarked session aggregate, sink-agnostic — shared by
-    * the registered file-sink replay and the count-only drain probe.
-    */
-  private def sessionAggOf(src: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    src
+      src: org.apache.spark.sql.DataFrame, name: String): org.apache.spark.sql.DataFrame = {
+    val sessions = src
       .withWatermark("ts", "0 seconds")
       .groupBy(col("user_id"), session_window(col("ts"), "8 hours").as("w"))
       .agg(count(lit(1)).as("n_events"),
         sum(Exact.d2(col("value"))).cast("double").as("sum_value"))
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n_events"), col("sum_value"))
-
-  /** COUNT-ONLY terminal for a streaming frame — the write-cost
-    * decomposition instrument (round-11 verdict #3): the same
-    * stateful pipeline runs to completion, but each micro-batch is
-    * drained through a count (which processes EVERY partition, so
-    * state commits — the q87 discipline) instead of the parquet file
-    * sink. Probing drain vs file-sink at the same scale separates the
-    * STATE term (merge/join/agg cost, measured here) from the SINK
-    * term (the emitted-row write, the difference). Returns the total
-    * emitted rows.
-    */
-  private[graft] def drainCount(s: org.apache.spark.sql.SparkSession,
-      df: org.apache.spark.sql.DataFrame, name: String): Long = {
-    val base = tempReplayDir(name)
-    val acc = s.sparkContext.longAccumulator(s"graft_drain_$name")
-    withStatePartitions(s) {
-      val query = df.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          acc.add(batch.count())
-        }
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    acc.value
-  }
-
-  /** q88's kernel through the count-only drain — ScaleProbe pairs its
-    * timing with q88_stream_session_replay's at the same scale; the
-    * one-row result carries the emitted-session count so the decade
-    * table shows the output the sink would have written.
-    */
-  private[graft] def sessionReplayDrainOnly(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val n = drainCount(s, sessionAggOf(eventsStream(s, d)), "q88drain")
-    Seq(n).toDF("n_sessions")
+    fileSinkReplay(s, sessions, name)
+      .orderBy(col("user_id"), col("session_start"))
   }
 
   /** [[orderedEventsChunkStream]]'s geometry for q88 — sessions
@@ -1528,13 +1482,7 @@ object StreamReplay {
     * inner join chained into the daily revenue window, one query.
     */
   private[graft] def joinAggReplay(s: org.apache.spark.sql.SparkSession,
-      src: org.apache.spark.sql.DataFrame, name: String): org.apache.spark.sql.DataFrame =
-    fileSinkReplay(s, joinAggOf(src), name).orderBy(col("window_start"))
-
-  /** q90's join→agg pipeline, sink-agnostic (same split as
-    * [[sessionAggOf]] — the drain probe reuses it).
-    */
-  private def joinAggOf(src: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      src: org.apache.spark.sql.DataFrame, name: String): org.apache.spark.sql.DataFrame = {
     def side(t: String, p: String) =
       src.filter(col("event_type") === t)
         .select(col("user_id").as(s"${p}_user"), col("event_id").as(s"${p}_id"),
@@ -1552,17 +1500,7 @@ object StreamReplay {
         sum(Exact.d2(col("purchase_value"))).cast("double").as("revenue"))
       .select(col("w.start").as("window_start"), col("n_pairs"),
         col("first_view"), col("last_purchase"), col("revenue"))
-    agg
-  }
-
-  /** q90's kernel through the count-only drain (see
-    * [[sessionReplayDrainOnly]]).
-    */
-  private[graft] def joinAggReplayDrainOnly(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val n = drainCount(s, joinAggOf(eventsStream(s, d)), "q90drain")
-    Seq(n).toDF("n_windows")
+    fileSinkReplay(s, agg, name).orderBy(col("window_start"))
   }
 
   /** EVENT-TIME TIMER EXPIRY — the inactivity-close callback
@@ -1651,19 +1589,16 @@ object StreamReplay {
     */
   private[graft] def orderedShardDocStream(s: org.apache.spark.sql.SparkSession,
       d: String, nChunks: Int,
-      deltaMaxDocId: Option[Long] = None,
       cols: Seq[String] = Seq("doc_id", "text"),
       sources: Seq[String] = Seq("src0", "src1")): org.apache.spark.sql.DataFrame = {
-    // memoized per (chunking, projection, shard set, delta cap) — see
+    // memoized per (chunking, projection, shard set) — see
     // orderedEventsChunkStream's Scaladoc; the arrival-order copy is
     // input preparation, identical across runs
-    val variant = s"$nChunks:${cols.mkString(",")}:" +
-      s"${sources.mkString(",")}:${deltaMaxDocId.getOrElse(-1L)}"
+    val variant = s"$nChunks:${cols.mkString(",")}:${sources.mkString(",")}"
     val orderedDir = orderedFixture.memo(d, "documents", variant) {
       val out = tempReplayDir("q93ord").resolve("docs").toString
       graft.Tables.documents(s, d)
         .filter(col("source").isin(sources: _*))
-        .filter(deltaMaxDocId.map(col("doc_id") <= _).getOrElse(lit(true)))
         .select(cols.map(col): _*)
         .repartitionByRange(nChunks, col("doc_id"))
         .sortWithinPartitions(col("doc_id"))
@@ -1672,9 +1607,8 @@ object StreamReplay {
         .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
       require(parts.nonEmpty,
         s"orderedShardDocStream: ${sources.mkString("/")} shard under $d" +
-          deltaMaxDocId.fold("")(m => s" with doc_id <= $m") +
-          " produced zero part files — empty shard or over-tight delta " +
-          "filter (fail-loud source guard, mirroring tableStream)")
+          " produced zero part files — empty shard " +
+          "(fail-loud source guard, mirroring tableStream)")
       val t0m = parts.map(_.lastModified()).max
       parts.zipWithIndex.foreach { case (f, i) =>
         f.setLastModified(t0m + (i + 1) * 2000L): Unit
@@ -1770,10 +1704,55 @@ object StreamReplay {
     * sort).
     */
   private[graft] def nearDupGateReplay(s: org.apache.spark.sql.SparkSession,
-      d: String, nChunks: Int,
-      deltaMaxDocId: Option[Long] = None): org.apache.spark.sql.DataFrame = {
+      d: String, nChunks: Int): org.apache.spark.sql.DataFrame = {
+    import s.implicits._
+    import graft.functions.TextVec.tokenSet
     val (idxPath, _, _) = graft.operators.Dedup.d16BuildIndex(s, d)
-    nearDupGateReplayOn(s, d, nChunks, idxPath, deltaMaxDocId)
+    val idx = graft.Tables.parquet(s, idxPath)
+      .select(col("rep_id"), col("ts"), col("band"), col("h"))
+    // ONE ordered copy, ONE streaming query: both gate halves fan out
+    // from the same band-emission node and union into one sink, so
+    // each trigger pays the micro-batch machinery once (the original
+    // two-replay shape paid two ordered-copy writes and two full
+    // AvailableNow replays — measured ~4 s of pure duplication at
+    // sf0.1). The within half's jaccard rides as NULL through the
+    // sink and is recomputed declaratively batch-side (see
+    // NearDupGateProcessor's Scaladoc for why).
+    val bands = graft.operators.Dedup.bandEmission(
+      orderedShardDocStream(s, d, nChunks)
+        .select(col("doc_id").as("rep_id"), array_sort(tokenSet(col("text"))).as("ts")))
+    val cross = bands.alias("n")
+      .join(idx.alias("c"),
+        col("n.band") === col("c.band") && col("n.h") === col("c.h"))
+      .select(col("n.rep_id").as("id_new"), col("c.rep_id").as("id_match"),
+        graft.functions.SortedArrayJaccard(col("n.ts"), col("c.ts")).as("jaccard"))
+      .filter(col("jaccard") >= 0.9)
+      .withColumn("kind", lit("corpus"))
+    val within = graft.streaming.NearDupGate.withinStreamPairs(
+        bands.select(col("band"), col("h"), col("rep_id"), col("ts"))
+          .as[graft.streaming.BandRow])
+      .toDF()
+      .select(col("id_new"), col("id_match"),
+        lit(null).cast("double").as("jaccard"), lit("stream").as("kind"))
+    val unioned = cross
+      .select(col("id_new"), col("id_match"), col("jaccard"), col("kind"))
+      .unionByName(within)
+    val raw = fileSinkReplay(s, unioned, "q93", RocksDbStateStore)
+      .distinct() // a pair can match in both bands
+    val shardSets = graft.Tables.documents(s, d)
+      .filter(col("source").isin("src0", "src1"))
+      .select(col("doc_id"), array_sort(tokenSet(col("text"))).as("ts"))
+    val withinPairs = raw.filter(col("kind") === "stream")
+      .select(col("id_new"), col("id_match"), col("kind"))
+      .join(shardSets.alias("a"), col("id_new") === col("a.doc_id"))
+      .join(shardSets.alias("b"), col("id_match") === col("b.doc_id"))
+      .select(col("id_new"), col("id_match"), col("kind"),
+        graft.functions.SortedArrayJaccard(col("a.ts"), col("b.ts")).as("jaccard"))
+    raw.filter(col("kind") === "corpus")
+      .select(col("id_new"), col("id_match"), col("kind"), col("jaccard"))
+      .unionByName(withinPairs
+        .select(col("id_new"), col("id_match"), col("kind"), col("jaccard")))
+      .orderBy(col("kind"), col("id_new"), col("id_match"))
   }
 
   /** STREAMING INGEST → TRANSACTION-LOG APPEND (q94) — the write side
@@ -2190,84 +2169,6 @@ object StreamReplay {
       .select(col("v").cast("long").as("version"), col("bucket"),
         col("n_docs"), col("content_xor"), col("sum_doc_id"))
       .orderBy(col("version"), col("bucket"))
-  }
-
-  /** q93's decade decomposition: index build (the amortized nightly
-    * term) timed apart from the STREAMING GATE REPLAY of a FIXED
-    * shard (capped at the base fixture's ids — ScaleGen replicas
-    * re-key upward) — replay_sec staying ~flat while the corpus and
-    * index grow 10× is the per-trigger-cost-∝-trigger-batch claim,
-    * measured end to end (both gate halves, all triggers, sink
-    * included).
-    */
-  private[graft] def q93ProbeStats(s: org.apache.spark.sql.SparkSession,
-      d: String, nChunks: Int,
-      deltaMaxDocId: Option[Long] = None): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val t0 = System.nanoTime()
-    val (idxPath, prefixLen, nSets) = graft.operators.Dedup.d16BuildIndex(s, d)
-    val buildSec = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val nPairs = nearDupGateReplayOn(s, d, nChunks, idxPath, deltaMaxDocId).count()
-    val replaySec = (System.nanoTime() - t1) / 1e9
-    Seq((nSets, prefixLen, nChunks, nPairs, buildSec, replaySec))
-      .toDF("corpus_sets", "prefix_len", "n_triggers", "n_pairs",
-        "build_sec", "replay_sec")
-  }
-
-  /** The gate's replay against an ALREADY-BUILT index — the scale
-    * probe times this separately from the amortized index build.
-    */
-  private[graft] def nearDupGateReplayOn(s: org.apache.spark.sql.SparkSession,
-      d: String, nChunks: Int, idxPath: String,
-      deltaMaxDocId: Option[Long]): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    import graft.functions.TextVec.tokenSet
-    val idx = graft.Tables.parquet(s, idxPath)
-      .select(col("rep_id"), col("ts"), col("band"), col("h"))
-    // ONE ordered copy, ONE streaming query: both gate halves fan out
-    // from the same band-emission node and union into one sink, so
-    // each trigger pays the micro-batch machinery once (the original
-    // two-replay shape paid two ordered-copy writes and two full
-    // AvailableNow replays — measured ~4 s of pure duplication at
-    // sf0.1). The within half's jaccard rides as NULL through the
-    // sink and is recomputed declaratively batch-side (see
-    // NearDupGateProcessor's Scaladoc for why).
-    val bands = graft.operators.Dedup.bandEmission(
-      orderedShardDocStream(s, d, nChunks, deltaMaxDocId)
-        .select(col("doc_id").as("rep_id"), array_sort(tokenSet(col("text"))).as("ts")))
-    val cross = bands.alias("n")
-      .join(idx.alias("c"),
-        col("n.band") === col("c.band") && col("n.h") === col("c.h"))
-      .select(col("n.rep_id").as("id_new"), col("c.rep_id").as("id_match"),
-        graft.functions.SortedArrayJaccard(col("n.ts"), col("c.ts")).as("jaccard"))
-      .filter(col("jaccard") >= 0.9)
-      .withColumn("kind", lit("corpus"))
-    val within = graft.streaming.NearDupGate.withinStreamPairs(
-        bands.select(col("band"), col("h"), col("rep_id"), col("ts"))
-          .as[graft.streaming.BandRow])
-      .toDF()
-      .select(col("id_new"), col("id_match"),
-        lit(null).cast("double").as("jaccard"), lit("stream").as("kind"))
-    val unioned = cross
-      .select(col("id_new"), col("id_match"), col("jaccard"), col("kind"))
-      .unionByName(within)
-    val raw = fileSinkReplay(s, unioned, "q93", RocksDbStateStore)
-      .distinct() // a pair can match in both bands
-    val shardSets = graft.Tables.documents(s, d)
-      .filter(col("source").isin("src0", "src1"))
-      .select(col("doc_id"), array_sort(tokenSet(col("text"))).as("ts"))
-    val withinPairs = raw.filter(col("kind") === "stream")
-      .select(col("id_new"), col("id_match"), col("kind"))
-      .join(shardSets.alias("a"), col("id_new") === col("a.doc_id"))
-      .join(shardSets.alias("b"), col("id_match") === col("b.doc_id"))
-      .select(col("id_new"), col("id_match"), col("kind"),
-        graft.functions.SortedArrayJaccard(col("a.ts"), col("b.ts")).as("jaccard"))
-    raw.filter(col("kind") === "corpus")
-      .select(col("id_new"), col("id_match"), col("kind"), col("jaccard"))
-      .unionByName(withinPairs
-        .select(col("id_new"), col("id_match"), col("kind"), col("jaccard")))
-      .orderBy(col("kind"), col("id_new"), col("id_match"))
   }
 
   /** [[orderedEventsChunkStream]]'s geometry for q90 — BOTH stateful

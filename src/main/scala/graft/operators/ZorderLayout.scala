@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * linearly sorted by x), runs the same single-column range probes
   * against both, and reports rows scanned (the scan node's output —
   * rows surviving row-group/page pruning, before the residual filter)
-  * next to rows matched. ZorderPruningSpec pins the asymmetry; the
-  * ScaleProbe entry records it at scale in SCALE.md.
+  * next to rows matched. ZorderPruningSpec pins the asymmetry; SCALE.md
+  * records it at sf0.01 and sf0.1.
   *
   * 100 TB shape: the write is `repartitionByRange(zkey)` +
   * `sortWithinPartitions` — one range shuffle, then independent
